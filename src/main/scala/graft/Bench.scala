@@ -38,8 +38,8 @@ object Bench {
     * projection-only queries, so their cells measure scan+count, not
     * the per-row work. Kept deliberately — every recorded round (and
     * the round-2 baseline the gate compares against) measured the
-    * same way, so cells stay comparable; the full-evaluation numbers
-    * live in the SCALE.md sweeps (tools/Scale GRAFT_SCALE_FORCE=hash). */
+    * same way, so cells stay comparable; full-evaluation timings come
+    * from tools.Scale, which hashes every output column. */
   def timeOnce(spark: SparkSession, sfDir: String,
                fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
     val t0 = System.nanoTime()

@@ -73,7 +73,8 @@ object GraftCheckpoint {
     // it would copy every block just to read the partition count.
     // Below the gate the caller then shares ONE copy instead of
     // paying a redundant copy per requested layout (round 18).
-    val bare = df.queryExecution.analyzed.getClass.getSimpleName == "LogicalRDD"
+    val bare = df.queryExecution.analyzed
+      .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
     val once = if (bare) df else df.localCheckpoint(true)
     val n = math.max(1, once.rdd.getNumPartitions)
     if (n < pinMin) once
@@ -107,8 +108,7 @@ object GraftCheckpoint {
     * default — below that an iteration's re-exchange is local-block
     * cheap and pinning is pure overhead; above it the per-iteration
     * exchange grows linearly while the pin stays one pass). */
-  private[graft] val PinMinPartitions: Int =
-    sys.env.getOrElse("GRAFT_PIN_MIN_PARTITIONS", "4").toInt
+  private[graft] val PinMinPartitions = 4
 
   def ensureDir(spark: SparkSession, dir: String): Unit = synchronized {
     // Match on the slash-terminated prefix ONLY: a bare startsWith(dir)

@@ -11,11 +11,11 @@ import org.apache.spark.sql.functions._
   * key). Semantics are identical to the plain join — provable, so the
   * salted form carries the plain join's oracle.
   *
-  * MEASURED LAW (round 12, tools/SkewProbe: 20M-row fact, one key
-  * holding 50%, 100k-key dim, local[32] — SCALE.md for the full
-  * table): broadcast 0.41s / AQE-at-defaults 5.04s / AQE tuned 1.73s /
-  * salted(32) 1.97s / no mitigation 3.68s. The operator guidance that
-  * follows:
+  * MEASURED LAW (round 12: 20M-row fact, one key holding 50%, 100k-key
+  * dim, local[32] — SCALE.md "Round 12: AQE skew-join vs manual salt"
+  * has the full table and the retired probe's commit): broadcast 0.41s /
+  * AQE-at-defaults 5.04s / AQE tuned 1.73s / salted(32) 1.97s / no
+  * mitigation 3.68s. The operator guidance that follows:
   *  1. BROADCAST FIRST. When the dim fits, there is no shuffle of the
   *     fact by key and skew is moot — 4-10x ahead of every
   *     mitigation. Salting a broadcastable join is a bug.

@@ -1,5 +1,8 @@
 package graft.tools
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, count, hash, lit, sum}
+
 import graft.SparkEntry
 
 /** Scaling measurement harness: drive the same registry queries over
@@ -25,29 +28,22 @@ object Scale {
     println(f"SCALE_CALIB ${graft.Bench.calibrate()}%.3f s")
     val spark = graft.core.GraftSession.build("graft-scale",
       graft.core.GraftSession.envCores)
+    // evaluate EVERY output column, not just count: for
+    // projection-only queries (lang-ID, quality, per-row rewrites)
+    // plain count() lets Catalyst prune the computed columns to a scan
+    // count — the timing then measures the scan, not the operator.
+    // The hash-of-all-columns aggregate defeats the pruning while
+    // staying codegen'd and collect-free.
+    def run(df: DataFrame): Long =
+      df.select(count(lit(1)).as("n"),
+          sum(hash(df.columns.map(col): _*).cast("long")))
+        .head.getLong(0)
     // warmup on the FIRST (smallest) dir so no measured cell pays JIT
     names.foreach { n =>
-      try SparkEntry.queries(n)(spark, dirs.head).count()
+      try run(SparkEntry.queries(n)(spark, dirs.head))
       catch { case _: Throwable => () }
       spark.catalog.clearCache()
     }
-    // GRAFT_SCALE_FORCE=hash: evaluate EVERY output column, not just
-    // count. For projection-only queries (lang-ID, quality, per-row
-    // rewrites) plain count() lets Catalyst prune the computed columns
-    // to a scan count — the timing then measures the scan, not the
-    // operator. The hash-of-struct aggregate defeats the pruning while
-    // staying codegen'd and collect-free.
-    val force = sys.env.get("GRAFT_SCALE_FORCE").contains("hash")
-    def run(df: org.apache.spark.sql.DataFrame): Long =
-      if (force)
-        df.select(org.apache.spark.sql.functions.count(
-            org.apache.spark.sql.functions.lit(1)).as("n"),
-          org.apache.spark.sql.functions.sum(
-            org.apache.spark.sql.functions.hash(
-              df.columns.map(org.apache.spark.sql.functions.col): _*)
-              .cast("long")))
-          .head.getLong(0)
-      else df.count()
     val cells = for (dir <- dirs; name <- names) yield {
       val fn = SparkEntry.queries(name)
       graft.operators.Dedup.lastCcRounds = -1

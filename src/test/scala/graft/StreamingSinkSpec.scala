@@ -318,6 +318,33 @@ class StreamingSinkSpec extends SparkTestBase {
     assert(got.map { case (id, (_, s, _)) => id -> s } == oracle)
   }
 
+  test("politeness scheduler: state holds one row per distinct host, " +
+      "not per URL of crawl history") {
+    import spark.implicits._
+    import graft.streaming.CrawlStream
+    val hosts = 5
+    val delays = Seq.empty[(String, Double)].toDF("domain", "crawl_delay")
+    Seq(4, 40).foreach { perHost =>
+      val urls = spark.range(hosts.toLong * perHost).select(
+        col("id").as("doc_id"),
+        concat(lit("https://h"), (col("id") % hosts).cast("string"),
+          lit(".example/p"), col("id").cast("string")).as("url"),
+        (col("id") % 4).as("bseq"))
+      val dir = tmp(s"sched_state_$perHost")
+      CrawlStream.writeArrivalBatches(urls, "bseq", dir)
+      val in = spark.readStream.schema("doc_id BIGINT, url STRING")
+        .option("maxFilesPerTrigger", 1).parquet(dir)
+      val name = s"sched_state_$perHost"
+      val q = CrawlStream.politenessStream(in, "doc_id", "url", delays)
+        .writeStream.format("memory").queryName(name)
+        .outputMode(OutputMode.Append()).trigger(Trigger.AvailableNow()).start()
+      try q.awaitTermination() finally q.stop()
+      assert(spark.table(name).count() == hosts.toLong * perHost)
+      assert(q.lastProgress.stateOperators.head.numRowsTotal == hosts,
+        s"$perHost URLs per host: state must be one counter per host")
+    }
+  }
+
   test("politeness scheduler: the slot counter survives a checkpoint RESTART " +
     "— issued slots never renumber when the crawler comes back up") {
     import spark.implicits._
