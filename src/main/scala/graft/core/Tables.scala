@@ -24,7 +24,8 @@ object Tables {
     * testdata generations, and the loader must keep both working:
     *   - TIMESTAMP(NANOS), which Spark's vectorized reader rejects —
     *     read as nano-since-epoch longs
-    *     (`spark.sql.legacy.parquet.nanosAsLong`) and rebuild a
+    *     (`spark.sql.legacy.parquet.nanosAsLong`, set once by
+    *     [[GraftSession.build]]) and rebuild a
     *     timestamp, truncating to Spark's native microsecond precision
     *   - TIMESTAMP(MICROS) without UTC adjustment, which Spark reads
     *     as TIMESTAMP_NTZ — cast to the session-zone TimestampType
@@ -32,7 +33,6 @@ object Tables {
     *     event-time functions (`unix_micros`, watermarks, `window()`)
     *     that require TimestampType keep analyzing. */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val df = spark.read.parquet(s"$dir/$name.parquet")
     if (name == "events") df.schema("ts").dataType match {
       case LongType => df.withColumn("ts", timestamp_micros(expr("ts div 1000")))

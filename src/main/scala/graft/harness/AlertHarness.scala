@@ -61,8 +61,8 @@ object AlertConform {
   *  - sigla injection + composite `alrt_key` (jobs.py:262-271) are
   *    codegen'd column expressions, not a Python UDF round-trip;
   *  - the history merge keeps the reference's read-modify-write month
-  *    semantics (union current month's other days, stage, dynamic
-  *    partition overwrite — jobs.py:295-318) which at scale only
+  *    semantics (union current month's other days, stage, overwrite
+  *    of the month partition — jobs.py:295-318) which at scale only
   *    rewrites the current month partition, never the whole history;
   *  - writes repartition to a small fixed file count like the
   *    reference (20 temp / 3 final+hist, jobs.py:277,293,315) — at
@@ -93,7 +93,6 @@ class AlertHarness(spark: SparkSession, schema: String, clock: RunClock,
   def finalName(table: String) = s"$schema.$table"
 
   spark.sql(s"CREATE DATABASE IF NOT EXISTS $schema")
-  spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
   /** Conform one alert result and append it to its family temp table
     * (reference generateAlerta, jobs.py:258-277). Returns the conformed
@@ -127,8 +126,8 @@ class AlertHarness(spark: SparkSession, schema: String, clock: RunClock,
     val hist = histName(table)
     if (spark.catalog.tableExists(hist)) {
       // merge with the current month's OTHER days (re-runs on the same
-      // day replace that day's rows), stage, then dynamic-partition
-      // overwrite of just this month
+      // day replace that day's rows), stage, then overwrite just this
+      // month
       val otherDays = spark.table(hist)
         .filter(col("dt_partition") === clock.dtPartition &&
           col("dt_calculo") =!= clock.dtCalculo)
@@ -136,8 +135,13 @@ class AlertHarness(spark: SparkSession, schema: String, clock: RunClock,
       merged.write.mode(SaveMode.Overwrite).format("parquet")
         .saveAsTable(hist + "_temp")
       faultInjector("staged")
-      spark.table(hist + "_temp").coalesce(3)
-        .write.mode(SaveMode.Overwrite).insertInto(hist)
+      // a STATIC partition spec replaces exactly this month under any
+      // session partitionOverwriteMode (Spark 4.1's insertInto ignores
+      // the writer's partitionOverwriteMode option)
+      val cols = spark.table(hist).columns.filter(_ != "dt_partition")
+      spark.sql(s"INSERT OVERWRITE TABLE $hist PARTITION (dt_partition = " +
+        s"'${clock.dtPartition}') SELECT /*+ COALESCE(3) */ " +
+        cols.mkString("`", "`, `", "`") + s" FROM ${hist}_temp")
       faultInjector("hist-inserted")
       spark.sql(s"DROP TABLE ${hist}_temp")
     } else {

@@ -700,19 +700,11 @@ object Dedup {
     (labels.select(col("node").as("doc_id"), col("comp").as("component")), iter)
   }
 
-  /** Session-scoped registry of materialized component tables, keyed
-    * by (SparkContext identity, corpus key, id/text cols, minhash
-    * params). [[componentsOf]] is the consumer path
-    * (compute-if-absent); [[buildComponents]] the producer path
-    * (always rebuilds). The context's applicationId is part of the key
-    * because the memoized frame's localCheckpoint blocks die with the
-    * context that wrote them — a memo hit from a stopped context would
-    * fail the consumer with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND (seen
-    * when one test suite stops the session and a later one rebuilds
-    * it); a fresh context must recompute, and the handful of dead
-    * entries a restart strands hold only unreachable plans. */
-  private val componentsMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  /** Materialized component tables, keyed by (context, corpus key,
+    * id/text cols, minhash params). [[componentsOf]] is the consumer
+    * path (evaluate-if-absent); [[buildComponents]] the producer path
+    * (always rebuilds). */
+  private val componentsMemo = new graft.core.Memo[String, DataFrame]
 
   private def componentsKey(docs: DataFrame, corpusKey: String,
                             idCol: String, textCol: String,
@@ -735,20 +727,17 @@ object Dedup {
     * materializes the labels with an eager localCheckpoint (plan
     * truncated to a block scan; two longs per clustered doc — orders
     * of magnitude smaller than the corpus), and later consumers with
-    * the same key scan the existing blocks.
-    *
-    * Deliberately NOT dropped by `spark.catalog.clearCache()` (the
-    * blocks are RDD-level, not catalog-cached), so the harnesses'
-    * per-query cache hygiene doesn't defeat the sharing; call
-    * [[releaseComponents]] to drop the memo (blocks are reclaimed by
-    * the ContextCleaner once the frames are unreferenced). */
+    * the same key scan the existing blocks. Memo lifecycle (not
+    * dropped by `clearCache()`): [[graft.core.Memo]]; call
+    * [[releaseComponents]] to reset. */
   def componentsOf(docs: DataFrame, corpusKey: String, idCol: String,
                    textCol: String, k: Int, bands: Int,
                    minAgree: Option[Int] = None): DataFrame =
-    componentsMemo.computeIfAbsent(
-      componentsKey(docs, corpusKey, idCol, textCol, k, bands, minAgree),
-      _ => minhashComponents(minhashSignatures(docs, idCol, textCol, k),
-        idCol, k, bands, minAgree = minAgree).localCheckpoint(true))
+    componentsMemo(
+        componentsKey(docs, corpusKey, idCol, textCol, k, bands, minAgree)) {
+      minhashComponents(minhashSignatures(docs, idCol, textCol, k),
+        idCol, k, bands, minAgree = minAgree).localCheckpoint(true)
+    }
 
   /** Producer path: ALWAYS recompute this corpus's components and
     * refresh the memo — the registry's build-the-stage entry. Keeping

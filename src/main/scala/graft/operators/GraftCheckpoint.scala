@@ -1,6 +1,10 @@
 package graft.operators
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graftext.DatasetFactory
 
 /** Idempotent reliable-checkpoint-dir setup shared by the iterative
   * operators ([[Dedup.connectedComponents]], [[Similarity.kmeansCells]]).
@@ -23,18 +27,19 @@ object GraftCheckpoint {
     * statics" barrier the iterative operators ([[Graph.pageRank]],
     * [[Graph.hits]], [[graft.operators.Classifier]]'s GD loop) lean on.
     *
-    * Why the AQE scope-off: `Dataset.localCheckpoint`/`checkpoint`
+    * Why the re-declared layout: `Dataset.localCheckpoint`/`checkpoint`
     * record the physical plan's `outputPartitioning` in the resulting
     * LogicalRDD, but under adaptive execution the captured plan is the
     * `AdaptiveSparkPlanExec` wrapper, whose reported partitioning is
     * `UnknownPartitioning` — so every checkpointed static silently
     * lost its layout on Spark 4 and each iteration re-exchanged it
     * (round-17 finding; plan-asserted by GraphSpec's
-    * partitioned-barrier test). Disabling AQE for just this
-    * materialization restores the recorded HashPartitioning; consumers
-    * run with AQE on as usual and see 0 exchanges on the keyed path.
-    * The frame being checkpointed here is an explicit repartition, so
-    * AQE would have nothing to adapt anyway — nothing is lost.
+    * partitioned-barrier test). The pin therefore materializes
+    * `repartition(n, keys)` under AQE — whose coalescing never touches
+    * a repartition-by-number shuffle, so the checkpoint holds exactly
+    * the `n` hash buckets — and then declares that shuffle's
+    * `HashPartitioning` on the checkpoint's LogicalRDD. Consumers see
+    * 0 exchanges on the keyed path, and no session conf is touched.
     *
     * `reliable = true` uses the reliable-FS `checkpoint()` barrier
     * (cluster mode, [[ensureDir]] must have run); note reliable
@@ -48,8 +53,7 @@ object GraftCheckpoint {
       org.apache.spark.sql.DataFrame = {
     val spark = df.sparkSession
     if (reliable)
-      return df.repartition(keys.map(org.apache.spark.sql.functions.col): _*)
-        .checkpoint()
+      return df.repartition(keys.map(col): _*).checkpoint()
     // Materialize ONCE under AQE: its coalescing picks a width that
     // tracks the frame's actual bytes (the scale-adaptive sizing
     // rule). Whether to PIN a hash(keys) layout is then a size
@@ -63,45 +67,27 @@ object GraftCheckpoint {
     //    per iterative query for nothing.
     //  - a LARGE static is exactly the round-9 regime: re-exchanging
     //    it every round is iters × |frame| over the wire, so one extra
-    //    statics-sized pass to record the layout (AQE scoped off —
-    //    under AQE the checkpoint records UnknownPartitioning and the
-    //    layout is lost, the round-17 finding) pays for itself in the
-    //    first iteration.
+    //    statics-sized pass to record the layout pays for itself in
+    //    the first iteration.
     // A frame that IS already a bare checkpoint (LogicalRDD — e.g.
     // HITS passing its shared edge checkpoint in twice for two
     // layouts) needs no pre-gate materialization: localCheckpoint on
     // it would copy every block just to read the partition count.
     // Below the gate the caller then shares ONE copy instead of
     // paying a redundant copy per requested layout (round 18).
-    val bare = df.queryExecution.analyzed
-      .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
+    val bare = df.queryExecution.analyzed.isInstanceOf[LogicalRDD]
     val once = if (bare) df else df.localCheckpoint(true)
     val n = math.max(1, once.rdd.getNumPartitions)
-    if (n < pinMin) once
-    else confScopeLock.synchronized {
-      // serialized flip: the AQE toggle is SESSION-global, so two
-      // concurrent barriers could interleave set/restore and one of
-      // them would checkpoint under AQE — recording
-      // UnknownPartitioning, the exact wrong-plan failure this helper
-      // exists to prevent (latent until a caller pools barriered
-      // trains on driver threads — the q167 shape; GraphSpec pins the
-      // concurrent case). The lock covers flip → materialize →
-      // restore; the pre-gate materialization above stays unlocked.
-      val key = "spark.sql.adaptive.enabled"
-      val old = spark.conf.get(key)
-      spark.conf.set(key, "false")
-      try once.repartition(n, keys.map(org.apache.spark.sql.functions.col): _*)
-        .localCheckpoint(true)
-      finally spark.conf.set(key, old)
+    if (n < pinMin) return once
+    val shuffle = once.repartition(n, keys.map(col): _*)
+    val pinned = shuffle.localCheckpoint(true)
+    (shuffle.queryExecution.analyzed, pinned.queryExecution.analyzed) match {
+      case (r: RepartitionByExpression, ck: LogicalRDD)
+          if ck.rdd.getNumPartitions == n =>
+        DatasetFactory.withPartitioning(spark, ck, r.partitioning)
+      case _ => pinned
     }
   }
-
-  /** JVM-wide monitor serializing session-conf scope flips (the AQE
-    * toggle above, [[graft.streaming.EventStream.withStatePartitions]]'
-    * shuffle-partition scope): session confs are process-global per
-    * session, so scoped set/restore pairs from concurrent driver
-    * threads must not interleave. Reentrant (Java monitor). */
-  private[graft] object confScopeLock
 
   /** Pin the layout once the AQE-coalesced static spans this many
     * partitions (~4 × advisoryPartitionSizeInBytes ≈ a quarter GB by

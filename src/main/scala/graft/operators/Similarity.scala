@@ -341,13 +341,12 @@ object Similarity {
     (assigned, codebook)
   }
 
-  /** Session-scoped memo of trained PQ artifacts — the
-    * [[cellsOf]] pattern applied to the PQ codebook: production
-    * trains ONCE per corpus snapshot and every encode/search batch
-    * reuses the artifact ((codes, codebook); codes keep only
-    * (pid, s, code, d2) — the sub-vectors do not persist). Same
-    * lifecycle contract as [[cellsOf]]: applicationId keys the
-    * entry, `clearCache()` does not drop it, [[releasePq]] resets.
+  /** Session-scoped memo ([[graft.core.Memo]]) of trained PQ
+    * artifacts — the [[cellsOf]] pattern applied to the PQ codebook:
+    * production trains ONCE per corpus snapshot and every
+    * encode/search batch reuses the artifact ((codes, codebook); codes
+    * keep only (pid, s, code, d2) — the sub-vectors do not persist).
+    * [[releasePq]] resets.
     *
     * CALLER CONTRACT (round-9 ADVICE): `corpusKey` must uniquely
     * identify an IMMUTABLE corpus snapshot — the memo is keyed by
@@ -360,18 +359,15 @@ object Similarity {
     * considered and rejected: it costs an extra corpus pass per
     * LOOKUP — exactly what the memo exists to avoid — and a
     * same-count-same-max edit would still slip it. */
-  private val pqMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (DataFrame, DataFrame)]()
+  private val pqMemo = new graft.core.Memo[String, (DataFrame, DataFrame)]
 
   def pqOf(df: DataFrame, corpusKey: String, idCol: String, vecCol: String,
            dim: Int, m: Int, ksub: Int, iters: Int): (DataFrame, DataFrame) =
-    pqMemo.computeIfAbsent(
-      s"${df.sparkSession.sparkContext.applicationId}|$corpusKey|$idCol|$vecCol|$dim|$m|$ksub|$iters",
-      _ => {
-        val (assigned, codebook) = pqTrain(df, idCol, vecCol, dim, m, ksub, iters)
-        (assigned.select(col("pid"), col("s"), col("code"), col("d2"))
-          .localCheckpoint(true), codebook)
-      })
+    pqMemo(s"${df.sparkSession.sparkContext.applicationId}|$corpusKey|$idCol|$vecCol|$dim|$m|$ksub|$iters") {
+      val (assigned, codebook) = pqTrain(df, idCol, vecCol, dim, m, ksub, iters)
+      (assigned.select(col("pid"), col("s"), col("code"), col("d2"))
+        .localCheckpoint(true), codebook)
+    }
 
   /** Drop every memoized PQ artifact. */
   def releasePq(): Unit = pqMemo.clear()
@@ -568,24 +564,21 @@ object Similarity {
     }
   }
 
-  /** Session-scoped memo of trained cell tables, keyed by (context,
-    * corpus key, cols, k, iters) — the in-session analog of the
-    * production shape where the coarse quantizer is trained ONCE per
-    * corpus snapshot and every query batch probes the same cell
-    * table. Same lifecycle contract as [[Dedup.componentsOf]]: the
-    * memoized frame is an eager localCheckpoint (plan truncated to a
-    * block scan, two ints per vector), applicationId keys the entry
-    * so a restarted context recomputes instead of scanning dead
-    * blocks, and `spark.catalog.clearCache()` does NOT drop it (RDD
-    * blocks, not catalog cache) — call [[releaseCells]] to reset. */
-  private val cellsMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  /** Session-scoped memo ([[graft.core.Memo]]) of trained cell
+    * tables (an eager localCheckpoint, two ints per vector), keyed by
+    * (context, corpus key, cols, k, iters) — the in-session analog of
+    * the production shape where the coarse quantizer is trained ONCE
+    * per corpus snapshot and every query batch probes the same cell
+    * table. Also holds [[refinedCellsOf]]'s artifacts, whose
+    * evaluation looks up the coarse cells in this same memo.
+    * [[releaseCells]] resets. */
+  private val cellsMemo = new graft.core.Memo[String, DataFrame]
 
   def cellsOf(df: DataFrame, corpusKey: String, idCol: String,
               vecCol: String, k: Int, iters: Int): DataFrame =
-    cellsMemo.computeIfAbsent(
-      s"${df.sparkSession.sparkContext.applicationId}|$corpusKey|$idCol|$vecCol|$k|$iters",
-      _ => kmeansCells(df, idCol, vecCol, k, iters).localCheckpoint(true))
+    cellsMemo(s"${df.sparkSession.sparkContext.applicationId}|$corpusKey|$idCol|$vecCol|$k|$iters") {
+      kmeansCells(df, idCol, vecCol, k, iters).localCheckpoint(true)
+    }
 
   /** Drop every memoized cell table. */
   def releaseCells(): Unit = cellsMemo.clear()
@@ -603,13 +596,13 @@ object Similarity {
   def refinedCellsOf(df: DataFrame, corpusKey: String, idCol: String,
                      vecCol: String, k: Int, iters: Int, dim: Int,
                      targetCell: Int = 63): DataFrame =
-    cellsMemo.computeIfAbsent(
-      s"${df.sparkSession.sparkContext.applicationId}|$corpusKey|$idCol|$vecCol|$k|$iters|refined|$dim|$targetCell",
-      _ => subdivideCells(
+    cellsMemo(s"${df.sparkSession.sparkContext.applicationId}|$corpusKey|$idCol|$vecCol|$k|$iters|refined|$dim|$targetCell") {
+      subdivideCells(
           df.join(cellsOf(df, corpusKey, idCol, vecCol, k, iters), Seq(idCol)),
           vecCol, "cell", dim, k, targetCell)
         .select(col(idCol), col("cell"))
-        .localCheckpoint(true))
+        .localCheckpoint(true)
+    }
 
   /** Cross-SESSION form of [[cellsOf]]: load the published
     * `(corpusKey, version)` quantizer snapshot from the artifact

@@ -10,19 +10,20 @@ import org.apache.spark.sql.functions._
   * ([[graft.operators.TextAnalysis.buildVocab]]) — as versioned
   * partitioned parquet tables.
   *
-  * The session-scoped memos (`cellsMemo`/`pqMemo`) model "train once
-  * per corpus snapshot, probe many times" WITHIN one application; at
-  * 100 TB you train once and probe for months across sessions, so the
-  * artifact must outlive the JVM. This store is that lifecycle rung:
+  * The session-scoped memos (`Similarity.cellsMemo`/`pqMemo`, each a
+  * [[graft.core.Memo]]) model "train once per corpus snapshot, probe
+  * many times" WITHIN one application; at 100 TB you train once and
+  * probe for months across sessions, so the artifact must outlive the
+  * JVM. This store is that lifecycle rung:
   * one parquet table per artifact KIND, partitioned by
   * `(corpus_key, version)`, so
   *  - every load prunes to one partition pair (the plan shows
   *    `PartitionFilters`, zero data files of other snapshots touched);
   *  - re-publishing one snapshot is a DYNAMIC partition overwrite —
-  *    other corpora/versions are untouched (the same
-  *    `insertInto`-discipline as the alert history table, applied via
-  *    the writer's `partitionOverwriteMode=dynamic` option so it
-  *    holds regardless of session conf);
+  *    other corpora/versions are untouched (the writer's
+  *    `partitionOverwriteMode=dynamic` option, so it holds regardless
+  *    of session conf, as the alert history table's static-partition
+  *    overwrite does);
   *  - an artifact table is append-only in versions: publish `v2`,
   *    flip consumers, keep `v1` for rollback — the
   *    snapshot-versioning contract the memo's `corpusKey` CALLER

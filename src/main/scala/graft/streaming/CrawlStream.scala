@@ -52,24 +52,6 @@ object CrawlStream {
   private def uniqueName(prefix: String): String =
     s"${prefix}_${drainSeq.incrementAndGet()}"
 
-  /** Start a drain under the engine's state-partition sizing rule
-    * ([[EventStream.StatePartitions]]): stateful operators pin their
-    * store count from `spark.sql.shuffle.partitions` at query start
-    * (captured into the checkpoint's offset metadata — AQE never
-    * coalesces state stores or streaming shuffles), so the right
-    * number tracks STATE SIZE, not core count. These drains ran at
-    * the session default (one per core, 32 on the bench host): every
-    * micro-batch committed 32 store files PER stateful operator —
-    * the cycle loop has three (dropDuplicates, discovery state, the
-    * politeness counter) — for state that is a few thousand 16-byte
-    * digests. `GRAFT_STATE_PARTITIONS` scales it to state volume at
-    * 100 TB, exactly as EventStream already documents; resuming
-    * checkpoints keep their recorded width (the conf is only read on
-    * first start). */
-  private def startScoped(spark: SparkSession)(
-      start: => org.apache.spark.sql.streaming.StreamingQuery) =
-    EventStream.withStatePartitions(spark, EventStream.StatePartitions)(start)
-
   /** Last drain view per prefix. A unique view per drain fixes the
     * name-collision race, but a repeated-drain harness (bench warmup +
     * timed passes) would otherwise pin one full result copy per drain
@@ -194,7 +176,7 @@ object CrawlStream {
     val files = reader.parquet(warcDir)
     val out = gatedRecords(files, policy, blocklist, gz = gz)
     val name = uniqueName(queryName)
-    val q = startScoped(spark) {
+    val q = EventStream.withStatePartitions(spark) {
       out.writeStream.format("memory").queryName(name)
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
     }
@@ -395,7 +377,7 @@ object CrawlStream {
         defaultDelaySecs = defaultDelaySecs)
       .select(col("url"), col("host"), col("slot_idx"), col("fetch_at_s"))
     val name = uniqueName(queryName)
-    val q = startScoped(spark) {
+    val q = EventStream.withStatePartitions(spark) {
       out.writeStream.format("memory").queryName(name)
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
     }
@@ -469,7 +451,7 @@ object CrawlStream {
         defaultDelaySecs = defaultDelaySecs)
       .select(col("url"), col("host"), col("slot_idx"), col("fetch_at_s"))
     val name = uniqueName(queryName)
-    val q = startScoped(spark) {
+    val q = EventStream.withStatePartitions(spark) {
       out.writeStream.format("memory").queryName(name)
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
     }
@@ -705,7 +687,7 @@ object CrawlStream {
     val out = crawlLoopPlan(spark, reader.parquet(warcDir), robots,
       blocklist, priorities, root, corpusKey, loadVersion, publishVersion,
       agent, defaultDelaySecs)
-    val q = startScoped(spark) {
+    val q = EventStream.withStatePartitions(spark) {
       out.writeStream.format("parquet")
         .option("path", sinkDir)
         .option("checkpointLocation", checkpointDir)
@@ -788,7 +770,7 @@ object CrawlStream {
       priorities, root, corpusKey, loadVersion, publishVersion, agent,
       defaultDelaySecs)
     val name = uniqueName(queryName)
-    val q = startScoped(spark) {
+    val q = EventStream.withStatePartitions(spark) {
       out.writeStream.format("memory").queryName(name)
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
     }
@@ -1025,7 +1007,7 @@ object CrawlStream {
       root, corpusKey, loadVersion, publishVersion, agent,
       maxFilesPerTrigger, defaultDelaySecs)
     val name = uniqueName(queryName)
-    val q = startScoped(spark) {
+    val q = EventStream.withStatePartitions(spark) {
       out.writeStream.format("memory").queryName(name)
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
     }
@@ -1134,7 +1116,7 @@ object CrawlStream {
     val out = cycleLoopPlan(spark, warcDir, robots, blocklist, delays,
       root, corpusKey, loadVersion, publishVersion, agent,
       maxFilesPerTrigger, defaultDelaySecs)
-    val q = startScoped(spark) {
+    val q = EventStream.withStatePartitions(spark) {
       out.writeStream.format("parquet")
         .option("path", sinkDir)
         .option("checkpointLocation", checkpointDir)
@@ -1164,7 +1146,7 @@ object CrawlStream {
     val out = expandFrontierStream(in, "url", "html", seen, delays,
       defaultDelaySecs = defaultDelaySecs)
     val name = uniqueName(queryName)
-    val q = startScoped(spark) {
+    val q = EventStream.withStatePartitions(spark) {
       out.writeStream.format("memory").queryName(name)
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
     }
@@ -1186,7 +1168,7 @@ object CrawlStream {
         defaultDelaySecs = defaultDelaySecs)
       .withColumn("doc_id", col("doc_id").cast("long")) // numeric ids back
     val name = uniqueName(queryName)
-    val q = startScoped(spark) {
+    val q = EventStream.withStatePartitions(spark) {
       out.writeStream.format("memory").queryName(name)
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
     }

@@ -22,24 +22,28 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object EventStream {
 
-  /** Stateful operators pin their partition count from
-    * `spark.sql.shuffle.partitions` at query start (AQE cannot
-    * coalesce state stores), so the right number tracks STATE SIZE,
-    * not core count: a handful here, scaled up with key cardinality
-    * at 100 TB. Scopes the conf to one query start and restores it. */
-  def withStatePartitions[T](spark: SparkSession, n: Int)(f: => T): T =
-    // the shared conf-scope lock: the conf is session-global, so two
-    // concurrent scoped starts (or a start racing a partitionedBarrier
-    // flip) must not interleave their set/restore pairs — a drain
-    // would otherwise pin the WRONG state-store width for its whole
-    // checkpoint lifetime. The stream captures the value at .start(),
-    // which the lock covers.
-    graft.operators.GraftCheckpoint.confScopeLock.synchronized {
+  /** Start a drain with [[StatePartitions]] shuffle partitions.
+    * Stateful operators pin their store count from
+    * `spark.sql.shuffle.partitions` at query start (captured into the
+    * checkpoint's offset metadata — AQE never coalesces state stores
+    * or streaming shuffles), so the right number tracks STATE SIZE,
+    * not core count: a handful here, scaled up with key cardinality at
+    * 100 TB; resuming checkpoints keep their recorded width. At the
+    * session default (one per core) every micro-batch of a stateful
+    * drain committed one store file per core per stateful operator.
+    * Scopes the conf to one `start` and restores it. */
+  def withStatePartitions[T](spark: SparkSession)(start: => T): T =
+    // `start` only captures the conf and launches the query thread, so
+    // no Spark job runs under the lock; it keeps concurrent starts
+    // from interleaving their set/restore pairs
+    startLock.synchronized {
       val key = "spark.sql.shuffle.partitions"
       val old = spark.conf.get(key)
-      spark.conf.set(key, n.toString)
-      try f finally spark.conf.set(key, old)
+      spark.conf.set(key, StatePartitions.toString)
+      try start finally spark.conf.set(key, old)
     }
+
+  private object startLock
 
   /** State-store partition count for these micro-batch drains.
     * Default 8 tracks the tiny test-SF state; `GRAFT_STATE_PARTITIONS`
@@ -50,13 +54,6 @@ object EventStream {
   def StatePartitions: Int =
     sys.env.getOrElse("GRAFT_STATE_PARTITIONS", "8").toInt
 
-  /** Raw parquet schema of events (ts arrives as a nano-long via
-    * nanosAsLong, or as TIMESTAMP_NTZ from micros-encoded testdata). */
-  private def rawSchema(spark: SparkSession, dir: String) = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(s"$dir/events.parquet").schema
-  }
-
   /** Streaming source with the event-time column normalized to
     * TimestampType (watermarks and `window()` require it), handling
     * both on-disk encodings — see core/Tables.load. The file source
@@ -64,7 +61,9 @@ object EventStream {
     * via a glob with the table dir as basePath. */
   def source(spark: SparkSession, dir: String,
              maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val raw = rawSchema(spark, dir)
+    // raw parquet schema: ts arrives as a nano-long (nanosAsLong) or
+    // as TIMESTAMP_NTZ from micros-encoded testdata
+    val raw = spark.read.parquet(s"$dir/events.parquet").schema
     val reader = spark.readStream
       .schema(raw)
       .option("basePath", dir)
@@ -90,7 +89,7 @@ object EventStream {
       .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total"))
       .select(date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("hour_start"),
         col("event_type"), col("n"), col("total"))
-    val q = withStatePartitions(spark, StatePartitions) {
+    val q = withStatePartitions(spark) {
       agg.writeStream
         .format("memory").queryName(qName)
         .outputMode(OutputMode.Complete())
@@ -109,9 +108,9 @@ object EventStream {
     val dim = graft.core.Tables.load(spark, dir, "customer")
       .select(col("c_custkey"), col("c_mktsegment"))
     val qName = "graft_stream_enriched"
-    val q = withStatePartitions(spark, StatePartitions) {
-      source(spark, dir)
-        .join(broadcast(dim), col("user_id") === col("c_custkey"), "left")
+    val events = source(spark, dir)
+    val q = withStatePartitions(spark) {
+      events.join(broadcast(dim), col("user_id") === col("c_custkey"), "left")
         .groupBy(col("c_mktsegment"))
         .agg(count(lit(1)).as("n"))
         .writeStream.format("memory").queryName(qName)
@@ -131,9 +130,9 @@ object EventStream {
     * append-mode to the sink; unique counts fold per type in batch. */
   def dedupedCounts(spark: SparkSession, dir: String): DataFrame = {
     val qName = "graft_stream_dedup"
-    val q = withStatePartitions(spark, StatePartitions) {
-      source(spark, dir)
-        .withWatermark("ts", "1 hour")
+    val events = source(spark, dir)
+    val q = withStatePartitions(spark) {
+      events.withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark("user_id", "event_type", "value")
         .select(col("user_id"), col("event_type"), col("value"))
         .writeStream.format("memory").queryName(qName)
@@ -162,7 +161,7 @@ object EventStream {
         col("ts").as("view_ts"))
       .withWatermark("view_ts", "1 hour")
     val qName = "graft_stream_join"
-    val q = withStatePartitions(spark, StatePartitions) {
+    val q = withStatePartitions(spark) {
       clicks.join(views,
           col("c_user") === col("v_user") &&
             col("view_ts") <= col("click_ts") &&
@@ -244,7 +243,7 @@ object EventStream {
       .writeStream.format("memory").queryName(qName)
       .outputMode(OutputMode.Update())
       .trigger(Trigger.AvailableNow())
-    val q = withStatePartitions(spark, StatePartitions) { writer.start() }
+    val q = withStatePartitions(spark) { writer.start() }
     q.awaitTermination()
     spark.table(qName)
   }
@@ -299,7 +298,7 @@ object EventStream {
       .writeStream.format("memory").queryName(qName)
       .outputMode(OutputMode.Update())
       .trigger(Trigger.AvailableNow())
-    val q = withStatePartitions(spark, StatePartitions) { writer.start() }
+    val q = withStatePartitions(spark) { writer.start() }
     q.awaitTermination()
     spark.table(qName)
   }

@@ -39,9 +39,9 @@ object IncrementalAlerts {
     val original = spark.table(streamView)
     stream.createOrReplaceTempView(streamView)
     try {
-      val q = EventStream.withStatePartitions(spark, EventStream.StatePartitions) {
-        alert.build(spark)
-          .writeStream.format("memory").queryName(queryName)
+      val detected = alert.build(spark)
+      val q = EventStream.withStatePartitions(spark) {
+        detected.writeStream.format("memory").queryName(queryName)
           .outputMode(OutputMode.Append())
           .trigger(Trigger.AvailableNow())
           .start()
@@ -61,7 +61,7 @@ object IncrementalAlerts {
                  queryName: String = "graft_incr_vadf"): DataFrame = {
     val schema = spark.read.parquet(vistaDir).schema
     val vista = spark.readStream.schema(schema).parquet(vistaDir)
-    val q = EventStream.withStatePartitions(spark, EventStream.StatePartitions) {
+    val q = EventStream.withStatePartitions(spark) {
       graft.harness.VadfAlert.detect(broadcast(documento), vista)
         .writeStream.format("memory").queryName(queryName)
         .outputMode(OutputMode.Append())
@@ -145,7 +145,7 @@ object IncrementalAlerts {
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
     basePath.foreach(p => reader.option("basePath", p))
     val docs = reader.parquet(docsPath)
-    val q = EventStream.withStatePartitions(spark, EventStream.StatePartitions) {
+    val q = EventStream.withStatePartitions(spark) {
       docs.withColumn("content_hash", md5(col("text")))
         .dropDuplicates("content_hash")
         .join(broadcast(seenDigests), Seq("content_hash"), "left_anti")
@@ -213,7 +213,7 @@ object IncrementalAlerts {
       .groupBy(col("vist_docu_dk"))
       .agg(max(col("vist_dt_abertura_vista")).as("dt_max_vista"))
 
-    val q = EventStream.withStatePartitions(spark, EventStream.StatePartitions) { vistaMax.writeStream
+    val q = EventStream.withStatePartitions(spark) { vistaMax.writeStream
       .outputMode(OutputMode.Update())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -354,7 +354,7 @@ object IncrementalAlerts {
         max(when(col("stao_tppr_dk").isin(nf.conversao: _*), 1)
           .otherwise(0)).as("flag_conversao_max"))
 
-    val q = EventStream.withStatePartitions(spark, EventStream.StatePartitions) { aggStream.writeStream
+    val q = EventStream.withStatePartitions(spark) { aggStream.writeStream
       .outputMode(OutputMode.Update())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>

@@ -55,8 +55,7 @@ object UpsertSink {
     // state-partition sizing rule (EventStream.StatePartitions): the
     // captured conf also scopes the foreachBatch merge's window shuffle
     // to the micro-batch's actual volume
-    EventStream.withStatePartitions(stream.sparkSession,
-        EventStream.StatePartitions) {
+    EventStream.withStatePartitions(stream.sparkSession) {
       stream.writeStream
         .foreachBatch((b: DataFrame, _: Long) =>
           upsertBatch(b, table, key, ord, tieBreak))

@@ -52,14 +52,8 @@ object CrawlScale {
         lit("<body><!-- c --><h1 title=\"a > b\">Heading &amp; "), id,
         lit("</h1>\n<p>"), col("text"),
         lit(".</p><div>tail &lt;"), id, lit("&gt;</div></body></html>"))
-      // GRAFT_CRAWL_GZ=1: run the whole composed chain over .warc.gz
-      // framing (per-record gzip members, the q172 member-verify walk)
-      // — measures what REAL-artifact decompression costs the pipeline
-      val gz = sys.env.get("GRAFT_CRAWL_GZ").contains("1")
       val files = d.select(col("doc_id"), page.as("text"))
-      val recs = (if (gz)
-          graft.sources.Warc.gzRecords(graft.sources.Warc.synthesizeWarcGz(files))
-        else graft.sources.Warc.records(graft.sources.Warc.synthesizeWarc(files)))
+      val recs = graft.sources.Warc.records(graft.sources.Warc.synthesizeWarc(files))
         .filter(col("rec_type") === "response")
         .select(col("file_id"), col("target_uri").as("url"), col("payload"))
       // skinny (id, url) barrier: the WARC walk runs once for the
@@ -86,9 +80,9 @@ object CrawlScale {
       val gatedRecs = recs
         .join(robotsOk, Seq("file_id"), "left_semi")
         .join(catOk, Seq("file_id"), "left_semi")
-      // GRAFT_CRAWL_POLITE=1 (verdict r11 ask #8): fetch in POLITENESS
-      // ORDER — the q156 schedule (slot_idx per host from the same
-      // robotsPolicy parse's Crawl-delay) joined onto the gated
+      // `polite` (verdict r11 ask #8): fetch in POLITENESS ORDER — the
+      // q156 schedule (slot_idx per host from the same robotsPolicy
+      // parse's Crawl-delay) joined onto the gated
       // records, then host-partitioned and slot-sorted, so downstream
       // consumes records exactly as a delay-respecting fetcher would
       // issue them. The census is order-invariant, so the polite and
@@ -173,17 +167,6 @@ object CrawlScale {
       println(f"STAGE $dir%-28s [$mode%-6s] $wall%.2f s -> " +
         f"packs=${census.getLong(0)} chunks=${census.getLong(1)} " +
         f"tokens=${census.getLong(2)}")
-      // per-stage row census (verdict r11 record): DIAGNOSTIC second
-      // pass — each count re-evaluates its chain prefix, so it is
-      // deliberately outside the timed single-job wall above
-      if (sys.env.contains("GRAFT_CRAWL_STAGE_ROWS")) {
-        val rows = Seq(
-          "fetched" -> fetched.count(), "survivors" -> survivors.count(),
-          "decontaminated" -> decon.count(), "ppl_gated" -> gated.count(),
-          "mixed" -> mixed.count(), "chunks" -> chunks.count())
-        println(s"ROWS $dir " +
-          rows.map { case (k, v) => s"$k=$v" }.mkString(" "))
-      }
       (wall, census.getLong(0), census.getLong(1), census.getLong(2))
     }
   }
@@ -193,30 +176,10 @@ object CrawlScale {
     require(dirs.nonEmpty, "at least one data dir")
     val spark = graft.core.GraftSession.build("graft-crawl-scale",
       graft.core.GraftSession.envCores)
-    val results: Seq[(String, String)] =
-      if (sys.env.contains("GRAFT_CRAWL_AB")) {
-        // politeness-cost A/B: the shared VM drifts 2x across 15-min
-        // windows, so the two modes INTERLEAVE inside one JVM (plain,
-        // polite, plain, polite per dir) and each mode reports its
-        // min; censuses must be identical (order-invariance check)
-        dirs.map { dir =>
-          val reps = Seq(false, true, false, true)
-            .map(p => p -> sweep(spark, dir, p))
-          val census = reps.map(_._2)
-            .map(r => (r._2, r._3, r._4)).distinct
-          require(census.size == 1,
-            s"census diverged across modes: $census")
-          val plainMin = reps.filter(!_._1).map(_._2._1).min
-          val politeMin = reps.filter(_._1).map(_._2._1).min
-          dir -> (f"""{"plain_s":$plainMin%.2f,"polite_s":$politeMin%.2f,""" +
-            s""""packs":${census.head._1},"chunks":${census.head._2},""" +
-            s""""tokens":${census.head._3}}""")
-        }
-      } else dirs.map { dir =>
-        val (w, p, c, t) = sweep(spark, dir,
-          sys.env.contains("GRAFT_CRAWL_POLITE"))
-        dir -> s"""{"wall":$w,"packs":$p,"chunks":$c,"tokens":$t}"""
-      }
+    val results = dirs.map { dir =>
+      val (w, p, c, t) = sweep(spark, dir, polite = false)
+      dir -> s"""{"wall":$w,"packs":$p,"chunks":$c,"tokens":$t}"""
+    }
     println(results.map { case (d, j) => s""""$d":$j""" }
       .mkString("{", ",", "}"))
     spark.stop()

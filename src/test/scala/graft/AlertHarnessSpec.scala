@@ -92,6 +92,36 @@ class AlertHarnessSpec extends SparkTestBase {
     assert(hist2.filter(col("dt_calculo") === "20260812").count() == 2)
   }
 
+  test("hist overwrite replaces only this month: a new month keeps the " +
+      "old month's partition under a STATIC session conf") {
+    // the lifecycle test above stays inside one month, where a static
+    // overwrite of the history table would go unnoticed
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val old = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try {
+      spark.sql("DROP DATABASE IF EXISTS t_months CASCADE")
+      val loc = java.nio.file.Files.createTempDirectory("graft_t_months")
+      spark.sql(s"CREATE DATABASE t_months LOCATION '$loc'")
+      def finalizeDay(clock: RunClock, rows: Seq[(Int, Int)]): Unit = {
+        val h = new AlertHarness(spark, "t_months", clock)
+        h.dropTemps(Seq("alerts"))
+        h.appendTemp(mkAlert(rows), "alerts")
+        h.finalize("alerts")
+      }
+      finalizeDay(RunClock(LocalDateTime.of(2026, 8, 31, 9, 0)),
+        Seq((1, 10), (2, 20)))
+      finalizeDay(RunClock(LocalDateTime.of(2026, 9, 1, 9, 0)),
+        Seq((3, 30)))
+      val byMonth = spark.table("t_months.hist_alerts")
+        .groupBy("dt_partition").count().collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(byMonth == Map("202608" -> 2L, "202609" -> 1L))
+      assert(spark.conf.get(key) == "static",
+        "the harness must not change the session's overwrite mode")
+    } finally spark.conf.set(key, old)
+  }
+
   test("failure injection: a crash at ANY finalize checkpoint never loses " +
       "or half-writes a history partition; re-running the day recovers") {
     // the reference's _temp staging table (jobs.py:311-316) exists so a

@@ -105,7 +105,7 @@ class GraphSpec extends SparkTestBase {
     // Dataset.localCheckpoint under AQE records UnknownPartitioning in
     // the LogicalRDD, so the iterative operators' "pre-partitioned
     // statics" silently re-exchanged every round on Spark 4 — the
-    // round-17 AQE-scoped barrier restores the recorded layout. This
+    // barrier declares the layout on its checkpoint instead. This
     // pins the contract the loops lean on: a same-key aggregate over
     // the barriered frame plans ZERO exchanges (and a plain
     // localCheckpoint of the same frame plans one).
@@ -150,15 +150,13 @@ class GraphSpec extends SparkTestBase {
   }
 
   test("partitionedBarrier: concurrent barriers both keep their layouts") {
-    // The AQE scope-off is a SESSION-global conf flip; unserialized,
-    // two concurrent barriers can interleave (A restores AQE while B's
-    // checkpoint is still materializing) and one frame records
-    // UnknownPartitioning — a silent wrong-plan (every downstream
-    // iteration re-exchanges). The round-18 confScopeLock serializes
-    // the flip window; this drives many barrier pairs from concurrent
-    // threads and asserts EVERY result kept its layout (0 Exchange on
-    // the same-key aggregate). Before the lock, this failed within a
-    // few dozen rounds.
+    // Barriers may run on concurrent driver threads (the q167 shape).
+    // Each must keep its layout, and none may touch session conf: a
+    // session-wide AQE flip races the other thread's checkpoint, which
+    // then records UnknownPartitioning — a silent wrong-plan (every
+    // downstream iteration re-exchanges). This drives many barrier
+    // pairs from concurrent threads and asserts EVERY result kept its
+    // layout (0 Exchange on the same-key aggregate).
     import spark.implicits._
     import org.apache.spark.sql.functions.sum
     import scala.concurrent.{Await, Future}
