@@ -59,21 +59,6 @@ object GraftSession {
       .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // streaming state-store backend A/B knob (SCALE.md "Streaming
-      // state"): default = Spark's HDFS-backed in-memory provider
-      // (state must fit the executor heap — fine at test SF);
-      // GRAFT_STATE_STORE=rocksdb switches to RocksDB with changelog
-      // checkpointing — the 100 TB setting, where state spills to
-      // local SSD and checkpoint uploads ship the per-batch CHANGELOG
-      // instead of full snapshots
-      .config("spark.sql.streaming.stateStore.providerClass",
-        sys.env.get("GRAFT_STATE_STORE") match {
-          case Some("rocksdb") =>
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-          case _ =>
-            "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
-        })
-      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "127.0.0.1")
     val spark = (if (hive) builder.enableHiveSupport() else builder).getOrCreate()

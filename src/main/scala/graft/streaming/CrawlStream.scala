@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.operators.{Html, UrlNormalize}
 import graft.sources.Warc
@@ -41,33 +40,6 @@ import graft.sources.Warc
   * crawl wants for a policy that updates between batches
   * (checkpointed here so the fixture synthesis isn't re-run). */
 object CrawlStream {
-
-  /** Memory-sink drains register a temp view under the query name; a
-    * JVM that walks the registry repeatedly (the spec suites, Verify,
-    * the bench's warmup+timed passes) would otherwise race or collide
-    * on the shared name while a prior drain's listener teardown is
-    * still in flight. Each drain call gets a unique suffix; the
-    * caller-facing name stays the stable prefix. */
-  private val drainSeq = new java.util.concurrent.atomic.AtomicLong(0L)
-  private def uniqueName(prefix: String): String =
-    s"${prefix}_${drainSeq.incrementAndGet()}"
-
-  /** Last drain view per prefix. A unique view per drain fixes the
-    * name-collision race, but a repeated-drain harness (bench warmup +
-    * timed passes) would otherwise pin one full result copy per drain
-    * in driver memory for the JVM lifetime. When a newer drain with
-    * the same prefix supersedes the old one, the old view is dropped —
-    * safe for a caller still holding the prior DataFrame, whose plan
-    * already resolved to the in-memory relation; only the catalog
-    * reference (and thus the sink data, once the caller lets go) is
-    * released. */
-  private val lastDrain =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def superseded(spark: SparkSession, prefix: String,
-                         name: String): Unit = {
-    val old = lastDrain.put(prefix, name)
-    if (old != null) spark.catalog.dropTempView(old)
-  }
 
   /** The gated-ingest TRANSFORM: works on a streaming OR batch
     * `files` frame (file_id, content) — the spec drains the stream
@@ -174,21 +146,8 @@ object CrawlStream {
     val reader = spark.readStream.schema("file_id BIGINT, content BINARY")
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
     val files = reader.parquet(warcDir)
-    val out = gatedRecords(files, policy, blocklist, gz = gz)
-    val name = uniqueName(queryName)
-    val q = EventStream.withStatePartitions(spark) {
-      out.writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    }
-    q.awaitTermination()
-    // resolve BEFORE publishing the name for supersession: our view
-    // can only be dropped by a later same-prefix drain once it is in
-    // lastDrain, so the lookup-then-publish order closes the
-    // concurrent-drain race (a sibling's dropTempView landing between
-    // our awaitTermination and our table lookup)
-    val drained = spark.table(name)
-    superseded(spark, queryName, name)
-    drained
+    EventStream.drainToMemory(
+      gatedRecords(files, policy, blocklist, gz = gz), queryName)
   }
 
   /** STREAMING politeness scheduler — the stateful rung
@@ -361,35 +320,35 @@ object CrawlStream {
   def drainFrontier(spark: SparkSession, sitemapDir: String,
                     policy: DataFrame,
                     defaultDelaySecs: Double = 1.0,
-                    queryName: String = "graft_stream_frontier"): DataFrame = {
+                    queryName: String = "graft_stream_frontier"): DataFrame =
+    EventStream.drainToMemory(
+      frontierPlan(spark, sitemapDir, policy, defaultDelaySecs, None),
+      queryName)
+
+  /** The discovery loop's unsunk plan: sitemap parts read one file per
+    * trigger, parsed, robots-gated, anti-probed against the `seen`
+    * URL digests when given (the recrawl gate), then slotted by
+    * [[politenessStream]]. Output: (url, host, slot_idx, fetch_at_s). */
+  private def frontierPlan(spark: SparkSession, sitemapDir: String,
+                           policy: DataFrame, defaultDelaySecs: Double,
+                           seen: Option[DataFrame]): DataFrame = {
     val in = spark.readStream.schema("domain STRING, xml STRING")
       .option("maxFilesPerTrigger", 1).parquet(sitemapDir)
-    val sm = UrlNormalize.sitemapUrls(in, "domain", "xml")
     val (allowed, _) = UrlNormalize.robotsVerdictCols(
       UrlNormalize.pathOf(col("url")), col("rules"))
-    val gated = sm
+    val urls = UrlNormalize.sitemapUrls(in, "domain", "xml")
       .join(broadcast(policy.select(col("domain"), col("rules"))),
         Seq("domain"), "left")
       .filter(allowed)
-      .select(col("url")).withColumn("uid", col("url"))
-    val out = politenessStream(gated, "uid", "url",
+      .select(col("url"))
+    val gated = seen.fold(urls)(seenDigests => urls
+      .withColumn("url_digest", md5(col("url")))
+      .join(seenDigests, Seq("url_digest"), "left_anti")
+      .drop("url_digest"))
+    politenessStream(gated.withColumn("uid", col("url")), "uid", "url",
         policy.select(col("domain"), col("crawl_delay")),
         defaultDelaySecs = defaultDelaySecs)
       .select(col("url"), col("host"), col("slot_idx"), col("fetch_at_s"))
-    val name = uniqueName(queryName)
-    val q = EventStream.withStatePartitions(spark) {
-      out.writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    }
-    q.awaitTermination()
-    // resolve BEFORE publishing the name for supersession: our view
-    // can only be dropped by a later same-prefix drain once it is in
-    // lastDrain, so the lookup-then-publish order closes the
-    // concurrent-drain race (a sibling's dropTempView landing between
-    // our awaitTermination and our table lookup)
-    val drained = spark.table(name)
-    superseded(spark, queryName, name)
-    drained
   }
 
   /** [[drainFrontier]] with RECRAWL DISCIPLINE — the q162 dedup-state
@@ -433,31 +392,9 @@ object CrawlStream {
       .loadUpTo(spark, root, "frontier_seen", corpusKey, loadVersion)
       .map(_.select(col("url_digest")))
       .getOrElse(spark.range(0).select(lit("").as("url_digest")))
-    val in = spark.readStream.schema("domain STRING, xml STRING")
-      .option("maxFilesPerTrigger", 1).parquet(sitemapDir)
-    val sm = UrlNormalize.sitemapUrls(in, "domain", "xml")
-    val (allowed, _) = UrlNormalize.robotsVerdictCols(
-      UrlNormalize.pathOf(col("url")), col("rules"))
-    val gated = sm
-      .join(broadcast(policy.select(col("domain"), col("rules"))),
-        Seq("domain"), "left")
-      .filter(allowed)
-      .select(col("url"))
-      .withColumn("url_digest", md5(col("url")))
-      .join(seen, Seq("url_digest"), "left_anti") // the recrawl gate
-      .drop("url_digest").withColumn("uid", col("url"))
-    val out = politenessStream(gated, "uid", "url",
-        policy.select(col("domain"), col("crawl_delay")),
-        defaultDelaySecs = defaultDelaySecs)
-      .select(col("url"), col("host"), col("slot_idx"), col("fetch_at_s"))
-    val name = uniqueName(queryName)
-    val q = EventStream.withStatePartitions(spark) {
-      out.writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    }
-    q.awaitTermination()
-    val drained = spark.table(name) // resolve before publish (race note above)
-    superseded(spark, queryName, name)
+    val drained = EventStream.drainToMemory(
+      frontierPlan(spark, sitemapDir, policy, defaultDelaySecs, Some(seen)),
+      queryName)
     // the DELTA: only this run's digests (distinct within-run — a
     // sitemap may list one URL twice in a single drain). An empty
     // delta writes no partition (dynamic overwrite with zero rows is
@@ -687,13 +624,10 @@ object CrawlStream {
     val out = crawlLoopPlan(spark, reader.parquet(warcDir), robots,
       blocklist, priorities, root, corpusKey, loadVersion, publishVersion,
       agent, defaultDelaySecs)
-    val q = EventStream.withStatePartitions(spark) {
-      out.writeStream.format("parquet")
-        .option("path", sinkDir)
-        .option("checkpointLocation", checkpointDir)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    }
-    q.awaitTermination()
+    EventStream.drain(spark)(out.writeStream.format("parquet")
+      .option("path", sinkDir)
+      .option("checkpointLocation", checkpointDir)
+      .outputMode("append"))
     // every row in this drain's files passed the anti gate against
     // state ≤ loadVersion, and the caller publishes each drain under
     // a fresh version (the protocol `require` above) — so the
@@ -766,17 +700,10 @@ object CrawlStream {
                             agent: String, defaultDelaySecs: Double,
                             queryName: String): DataFrame = {
     import graft.sources.ArtifactStore
-    val out = crawlLoopPlan(spark, files, robots, blocklist,
-      priorities, root, corpusKey, loadVersion, publishVersion, agent,
-      defaultDelaySecs)
-    val name = uniqueName(queryName)
-    val q = EventStream.withStatePartitions(spark) {
-      out.writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    }
-    q.awaitTermination()
-    val drained = spark.table(name) // resolve before publish (race note above)
-    superseded(spark, queryName, name)
+    val drained = EventStream.drainToMemory(
+      crawlLoopPlan(spark, files, robots, blocklist, priorities, root,
+        corpusKey, loadVersion, publishVersion, agent, defaultDelaySecs),
+      queryName)
     val delta = drained.select(md5(col("url")).as("url_digest")).distinct()
     ArtifactStore.save(delta, root, "frontier_seen", corpusKey,
       publishVersion)
@@ -1002,18 +929,11 @@ object CrawlStream {
                            maxFilesPerTrigger: Option[Int] = None,
                            defaultDelaySecs: Double = 1.0,
                            queryName: String = "graft_cycle_loop"): DataFrame = {
-    import graft.sources.ArtifactStore
-    val out = cycleLoopPlan(spark, warcDir, robots, blocklist, delays,
-      root, corpusKey, loadVersion, publishVersion, agent,
-      maxFilesPerTrigger, defaultDelaySecs)
-    val name = uniqueName(queryName)
-    val q = EventStream.withStatePartitions(spark) {
-      out.writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    }
-    q.awaitTermination()
-    val drained = spark.table(name) // resolve before publish (race note above)
-    superseded(spark, queryName, name)
+    val drained = EventStream.drainToMemory(
+      cycleLoopPlan(spark, warcDir, robots, blocklist, delays, root,
+        corpusKey, loadVersion, publishVersion, agent, maxFilesPerTrigger,
+        defaultDelaySecs),
+      queryName)
     publishCycleDeltas(drained, root, corpusKey, publishVersion)
     drained
   }
@@ -1116,13 +1036,10 @@ object CrawlStream {
     val out = cycleLoopPlan(spark, warcDir, robots, blocklist, delays,
       root, corpusKey, loadVersion, publishVersion, agent,
       maxFilesPerTrigger, defaultDelaySecs)
-    val q = EventStream.withStatePartitions(spark) {
-      out.writeStream.format("parquet")
-        .option("path", sinkDir)
-        .option("checkpointLocation", checkpointDir)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    }
-    q.awaitTermination()
+    EventStream.drain(spark)(out.writeStream.format("parquet")
+      .option("path", sinkDir)
+      .option("checkpointLocation", checkpointDir)
+      .outputMode("append"))
     publishSinkDelta(spark, sinkDir, root, corpusKey, loadVersion,
         publishVersion) { newRows =>
       publishCycleDeltas(newRows, root, corpusKey, publishVersion)
@@ -1143,17 +1060,10 @@ object CrawlStream {
                           queryName: String = "graft_stream_expand"): DataFrame = {
     val in = spark.readStream.schema("url STRING, html STRING")
       .option("maxFilesPerTrigger", 1).parquet(pagesDir)
-    val out = expandFrontierStream(in, "url", "html", seen, delays,
-      defaultDelaySecs = defaultDelaySecs)
-    val name = uniqueName(queryName)
-    val q = EventStream.withStatePartitions(spark) {
-      out.writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    }
-    q.awaitTermination()
-    val drained = spark.table(name) // resolve before publish (race note above)
-    superseded(spark, queryName, name)
-    drained
+    EventStream.drainToMemory(
+      expandFrontierStream(in, "url", "html", seen, delays,
+        defaultDelaySecs = defaultDelaySecs),
+      queryName)
   }
 
   /** Drain a [[writeArrivalBatches]] directory through
@@ -1167,19 +1077,6 @@ object CrawlStream {
     val out = politenessStream(in, "doc_id", "url", delays,
         defaultDelaySecs = defaultDelaySecs)
       .withColumn("doc_id", col("doc_id").cast("long")) // numeric ids back
-    val name = uniqueName(queryName)
-    val q = EventStream.withStatePartitions(spark) {
-      out.writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    }
-    q.awaitTermination()
-    // resolve BEFORE publishing the name for supersession: our view
-    // can only be dropped by a later same-prefix drain once it is in
-    // lastDrain, so the lookup-then-publish order closes the
-    // concurrent-drain race (a sibling's dropTempView landing between
-    // our awaitTermination and our table lookup)
-    val drained = spark.table(name)
-    superseded(spark, queryName, name)
-    drained
+    EventStream.drainToMemory(out, queryName)
   }
 }

@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.streaming.state.{StateStore, StateStoreProviderId}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
 /** Structured Streaming over the `events` table (an engine extension —
   * the reference is batch-only, SURVEY.md §2.9).
@@ -22,37 +23,93 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object EventStream {
 
-  /** Start a drain with [[StatePartitions]] shuffle partitions.
-    * Stateful operators pin their store count from
-    * `spark.sql.shuffle.partitions` at query start (captured into the
-    * checkpoint's offset metadata — AQE never coalesces state stores
-    * or streaming shuffles), so the right number tracks STATE SIZE,
-    * not core count: a handful here, scaled up with key cardinality at
-    * 100 TB; resuming checkpoints keep their recorded width. At the
-    * session default (one per core) every micro-batch of a stateful
-    * drain committed one store file per core per stateful operator.
-    * Scopes the conf to one `start` and restores it. */
-  def withStatePartitions[T](spark: SparkSession)(start: => T): T =
-    // `start` only captures the conf and launches the query thread, so
+  /** Run `writer` as one AvailableNow drain — every stream in graft
+    * does — like a batch query: start it, wait for it, unload its state
+    * stores and return the finished query. Generic in the row type, so
+    * typed Datasets drain as they are.
+    *
+    * It starts with `spark.sql.shuffle.partitions` = [[StatePartitions]]
+    * (the stream clones the session conf at `start`, so the conf is
+    * set around `start` only). Stateful operators pin their store count
+    * from it at query start (captured into the checkpoint's offset
+    * metadata — AQE never coalesces state stores or streaming
+    * shuffles), so it tracks STATE SIZE, not core count; resuming
+    * checkpoints keep their recorded width. At the session default
+    * (one per core) every micro-batch committed one store file per core
+    * per stateful operator. A foreachBatch drain's batch function runs
+    * its shuffles at the same width. */
+  def drain[T](spark: SparkSession)(writer: DataStreamWriter[T]): StreamingQuery = {
+    writer.trigger(Trigger.AvailableNow())
+    // `start` only clones the conf and launches the query thread, so
     // no Spark job runs under the lock; it keeps concurrent starts
     // from interleaving their set/restore pairs
-    startLock.synchronized {
+    val q = startLock.synchronized {
       val key = "spark.sql.shuffle.partitions"
       val old = spark.conf.get(key)
       spark.conf.set(key, StatePartitions.toString)
-      try start finally spark.conf.set(key, old)
+      try writer.start() finally spark.conf.set(key, old)
     }
+    q.awaitTermination()
+    unloadStateStores(q.runId)
+    q
+  }
+
+  /** Unload, after a last maintenance pass, the state-store providers
+    * of the finished run `runId`: Spark unloads them only from its 60 s
+    * maintenance task, so each drain's state stayed on the heap until
+    * then. Only `StateStore`'s private `loadedProviders` lists them.
+    * `spark.sql.streaming.stateStore.unloadOnCommit` is no substitute:
+    * its stores are never reported active, so a maintenance task
+    * started by any other query closes them under a running drain. */
+  private def unloadStateStores(runId: java.util.UUID): Unit = {
+    val field = StateStore.getClass.getDeclaredField("loadedProviders")
+    field.setAccessible(true)
+    val loaded = field.get(StateStore)
+      .asInstanceOf[scala.collection.mutable.HashMap[StateStoreProviderId, _]]
+    loaded.synchronized(loaded.keys.filter(_.queryRunId == runId).toList)
+      .foreach(StateStore.doMaintenanceAndUnload)
+  }
 
   private object startLock
 
-  /** State-store partition count for these micro-batch drains.
-    * Default 8 tracks the tiny test-SF state; `GRAFT_STATE_PARTITIONS`
-    * overrides for scale sweeps — unlike shuffle partitions, this
-    * CANNOT be AQE-coalesced after the fact (state stores pin their
+  /** State-store partition count for the drains. 8 tracks the tiny
+    * test-SF state; unlike shuffle partitions it CANNOT be
+    * AQE-coalesced after the fact (state stores pin their
     * partitioning at first checkpoint), so at 100 TB it is sized to
     * state volume up front (see SCALE.md "Streaming state"). */
-  def StatePartitions: Int =
-    sys.env.getOrElse("GRAFT_STATE_PARTITIONS", "8").toInt
+  val StatePartitions = 8
+
+  private val drainSeq = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** Last drain view per prefix (see [[drainToMemory]]). */
+  private val lastDrain =
+    new java.util.concurrent.ConcurrentHashMap[String, String]()
+
+  /** [[drain]] `ds` into a memory sink and return the drained table.
+    *
+    * Each drain's query (and so its temp view) is named
+    * `<prefix>_<n>`, unique in the JVM: Spark refuses a second active
+    * query under one name, so two threads draining one function on one
+    * session, or a registry walk repeating a drain while the prior
+    * one's teardown is in flight, would otherwise collide. When a newer
+    * same-prefix drain finishes, the older view is dropped, so repeated
+    * drains do not pin one result copy each; a caller still holding the
+    * older DataFrame keeps it, its plan already resolved to the
+    * in-memory relation. The result resolves BEFORE its name is
+    * published in `lastDrain`, the only place a later drain can drop it
+    * from — so a sibling's `dropTempView` cannot land between this
+    * drain's end and its table lookup. */
+  def drainToMemory[T](ds: Dataset[T], prefix: String,
+                       mode: OutputMode = OutputMode.Append()): DataFrame = {
+    val spark = ds.sparkSession
+    val name = s"${prefix}_${drainSeq.incrementAndGet()}"
+    drain(spark)(ds.writeStream.format("memory").queryName(name)
+      .outputMode(mode))
+    val drained = spark.table(name)
+    val old = lastDrain.put(prefix, name)
+    if (old != null) spark.catalog.dropTempView(old)
+    drained
+  }
 
   /** Streaming source with the event-time column normalized to
     * TimestampType (watermarks and `window()` require it), handling
@@ -82,22 +139,13 @@ object EventStream {
   /** Hourly tumbling-window counts per event type, drained to a memory
     * sink. Complete output mode so every window is emitted on drain. */
   def hourlyCounts(spark: SparkSession, dir: String): DataFrame = {
-    val qName = "graft_stream_hourly"
     val agg = source(spark, dir)
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total"))
       .select(date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("hour_start"),
         col("event_type"), col("n"), col("total"))
-    val q = withStatePartitions(spark) {
-      agg.writeStream
-        .format("memory").queryName(qName)
-        .outputMode(OutputMode.Complete())
-        .trigger(Trigger.AvailableNow())
-        .start()
-    }
-    q.awaitTermination()
-    spark.table(qName)
+    drainToMemory(agg, "graft_stream_hourly", OutputMode.Complete())
   }
 
   /** Stream-static enrichment: the streaming micro-batches probe the
@@ -107,19 +155,11 @@ object EventStream {
   def enriched(spark: SparkSession, dir: String): DataFrame = {
     val dim = graft.core.Tables.load(spark, dir, "customer")
       .select(col("c_custkey"), col("c_mktsegment"))
-    val qName = "graft_stream_enriched"
-    val events = source(spark, dir)
-    val q = withStatePartitions(spark) {
-      events.join(broadcast(dim), col("user_id") === col("c_custkey"), "left")
-        .groupBy(col("c_mktsegment"))
-        .agg(count(lit(1)).as("n"))
-        .writeStream.format("memory").queryName(qName)
-        .outputMode(OutputMode.Complete())
-        .trigger(Trigger.AvailableNow())
-        .start()
-    }
-    q.awaitTermination()
-    spark.table(qName)
+    val agg = source(spark, dir)
+      .join(broadcast(dim), col("user_id") === col("c_custkey"), "left")
+      .groupBy(col("c_mktsegment"))
+      .agg(count(lit(1)).as("n"))
+    drainToMemory(agg, "graft_stream_enriched", OutputMode.Complete())
   }
 
   /** Streaming idempotency-key dedup: `dropDuplicatesWithinWatermark`
@@ -129,19 +169,11 @@ object EventStream {
     * `dropDuplicates` would grow with the corpus). Survivors drain
     * append-mode to the sink; unique counts fold per type in batch. */
   def dedupedCounts(spark: SparkSession, dir: String): DataFrame = {
-    val qName = "graft_stream_dedup"
-    val events = source(spark, dir)
-    val q = withStatePartitions(spark) {
-      events.withWatermark("ts", "1 hour")
-        .dropDuplicatesWithinWatermark("user_id", "event_type", "value")
-        .select(col("user_id"), col("event_type"), col("value"))
-        .writeStream.format("memory").queryName(qName)
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .start()
-    }
-    q.awaitTermination()
-    spark.table(qName).groupBy(col("event_type"))
+    val unique = source(spark, dir)
+      .withWatermark("ts", "1 hour")
+      .dropDuplicatesWithinWatermark("user_id", "event_type", "value")
+      .select(col("user_id"), col("event_type"), col("value"))
+    drainToMemory(unique, "graft_stream_dedup").groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_unique"))
   }
 
@@ -160,20 +192,12 @@ object EventStream {
       .select(col("event_id").as("view_id"), col("user_id").as("v_user"),
         col("ts").as("view_ts"))
       .withWatermark("view_ts", "1 hour")
-    val qName = "graft_stream_join"
-    val q = withStatePartitions(spark) {
-      clicks.join(views,
-          col("c_user") === col("v_user") &&
-            col("view_ts") <= col("click_ts") &&
-            col("view_ts") >= col("click_ts") - expr("INTERVAL 10 MINUTES"))
-        .select(col("click_id"), col("view_id"))
-        .writeStream.format("memory").queryName(qName)
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .start()
-    }
-    q.awaitTermination()
-    spark.table(qName)
+    val pairs = clicks.join(views,
+        col("c_user") === col("v_user") &&
+          col("view_ts") <= col("click_ts") &&
+          col("view_ts") >= col("click_ts") - expr("INTERVAL 10 MINUTES"))
+      .select(col("click_id"), col("view_id"))
+    drainToMemory(pairs, "graft_stream_join")
   }
 
   /** Epoch micros at FULL precision. `getTime` alone carries only
@@ -214,12 +238,11 @@ object EventStream {
                    maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     import spark.implicits._
     val stepsArr = steps.toArray
-    val qName = "graft_stream_funnel"
     val events = source(spark, dir, maxFilesPerTrigger)
       .withWatermark("ts", "1 hour")
       .filter(col("event_type").isin(steps.distinct: _*))
       .select(col("user_id"), col("event_type"), col("ts"))
-    val writer = events.as[(Long, String, java.sql.Timestamp)]
+    val levels = events.as[(Long, String, java.sql.Timestamp)]
       .groupByKey(_._1)
       .flatMapGroupsWithState[FunnelBuf, FunnelOut](
         OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
@@ -240,12 +263,7 @@ object EventStream {
             kept.map(_._2).toSeq))
           Iterator(FunnelOut(user, lvl))
       }
-      .writeStream.format("memory").queryName(qName)
-      .outputMode(OutputMode.Update())
-      .trigger(Trigger.AvailableNow())
-    val q = withStatePartitions(spark) { writer.start() }
-    q.awaitTermination()
-    spark.table(qName)
+    drainToMemory(levels, "graft_stream_funnel", OutputMode.Update())
   }
 
   /** Drained [[funnelLevels]] folded to the batch funnel's output
@@ -278,8 +296,7 @@ object EventStream {
     import spark.implicits._
     val events = source(spark, dir)
       .select(col("user_id"), col("ts"), col("value"))
-    val qName = "graft_stream_sessions"
-    val writer = events.as[(Long, java.sql.Timestamp, Double)]
+    val sessions = events.as[(Long, java.sql.Timestamp, Double)]
       .groupByKey(_._1)
       .flatMapGroupsWithState[SessionState, SessionOut](
         OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
@@ -295,11 +312,6 @@ object EventStream {
           Iterator(SessionOut(user, n,
             BigDecimal(tot).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble))
       }
-      .writeStream.format("memory").queryName(qName)
-      .outputMode(OutputMode.Update())
-      .trigger(Trigger.AvailableNow())
-    val q = withStatePartitions(spark) { writer.start() }
-    q.awaitTermination()
-    spark.table(qName)
+    drainToMemory(sessions, "graft_stream_sessions", OutputMode.Update())
   }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+import org.apache.spark.sql.streaming.OutputMode
 
 /** Incremental alert detection — the architectural inversion of the
   * reference's nightly full rescan (src/alertas/alertas.sh relaunches
@@ -38,17 +38,8 @@ object IncrementalAlerts {
                      queryName: String): DataFrame = {
     val original = spark.table(streamView)
     stream.createOrReplaceTempView(streamView)
-    try {
-      val detected = alert.build(spark)
-      val q = EventStream.withStatePartitions(spark) {
-        detected.writeStream.format("memory").queryName(queryName)
-          .outputMode(OutputMode.Append())
-          .trigger(Trigger.AvailableNow())
-          .start()
-      }
-      q.awaitTermination()
-      spark.table(queryName)
-    } finally original.createOrReplaceTempView(streamView)
+    try EventStream.drainToMemory(alert.build(spark), queryName)
+    finally original.createOrReplaceTempView(streamView)
   }
 
   /** Streaming VADF over a vista changelog directory: every arriving
@@ -61,15 +52,8 @@ object IncrementalAlerts {
                  queryName: String = "graft_incr_vadf"): DataFrame = {
     val schema = spark.read.parquet(vistaDir).schema
     val vista = spark.readStream.schema(schema).parquet(vistaDir)
-    val q = EventStream.withStatePartitions(spark) {
-      graft.harness.VadfAlert.detect(broadcast(documento), vista)
-        .writeStream.format("memory").queryName(queryName)
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .start()
-    }
-    q.awaitTermination()
-    spark.table(queryName)
+    EventStream.drainToMemory(
+      graft.harness.VadfAlert.detect(broadcast(documento), vista), queryName)
   }
 
   /** Incremental maintenance of an ANTI-JOIN detector under a CHANGING
@@ -145,18 +129,12 @@ object IncrementalAlerts {
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
     basePath.foreach(p => reader.option("basePath", p))
     val docs = reader.parquet(docsPath)
-    val q = EventStream.withStatePartitions(spark) {
+    EventStream.drainToMemory(
       docs.withColumn("content_hash", md5(col("text")))
         .dropDuplicates("content_hash")
         .join(broadcast(seenDigests), Seq("content_hash"), "left_anti")
-        .drop("content_hash")
-        .writeStream.format("memory").queryName(queryName)
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .start()
-    }
-    q.awaitTermination()
-    spark.table(queryName)
+        .drop("content_hash"),
+      queryName)
   }
 
   /** Incremental GATE — a detector with a MAX-PER-GROUP core
@@ -213,7 +191,7 @@ object IncrementalAlerts {
       .groupBy(col("vist_docu_dk"))
       .agg(max(col("vist_dt_abertura_vista")).as("dt_max_vista"))
 
-    val q = EventStream.withStatePartitions(spark) { vistaMax.writeStream
+    EventStream.drain(spark)(vistaMax.writeStream
       .outputMode(OutputMode.Update())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -227,19 +205,11 @@ object IncrementalAlerts {
           val untouched = spark.table(resultTable)
             .join(changed.select(col("vist_docu_dk")),
               col("alrt_docu_dk") === col("vist_docu_dk"), "left_anti")
-          untouched.unionByName(refreshed)
-            .write.mode("overwrite").format("parquet")
-            .saveAsTable(resultTable + "_stage")
-          spark.table(resultTable + "_stage")
-            .write.mode("overwrite").format("parquet").saveAsTable(resultTable)
-          spark.sql(s"DROP TABLE ${resultTable}_stage")
+          UpsertSink.stagedOverwrite(untouched.unionByName(refreshed),
+            resultTable)
         } finally changed.unpersist()
         ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    }
-    q.awaitTermination()
+      })
     candidates.unpersist()
     spark.table(resultTable)
   }
@@ -354,7 +324,7 @@ object IncrementalAlerts {
         max(when(col("stao_tppr_dk").isin(nf.conversao: _*), 1)
           .otherwise(0)).as("flag_conversao_max"))
 
-    val q = EventStream.withStatePartitions(spark) { aggStream.writeStream
+    EventStream.drain(spark)(aggStream.writeStream
       .outputMode(OutputMode.Update())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -367,19 +337,11 @@ object IncrementalAlerts {
               col("alrt_docu_dk") === col("vist_docu_dk"), "left_anti")
           // a changed doc that now fails the gate contributes no
           // refreshed row — the overwrite IS the retraction
-          untouched.unionByName(refreshed)
-            .write.mode("overwrite").format("parquet")
-            .saveAsTable(resultTable + "_stage")
-          spark.table(resultTable + "_stage")
-            .write.mode("overwrite").format("parquet").saveAsTable(resultTable)
-          spark.sql(s"DROP TABLE ${resultTable}_stage")
+          UpsertSink.stagedOverwrite(untouched.unionByName(refreshed),
+            resultTable)
         } finally changed.unpersist()
         ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    }
-    q.awaitTermination()
+      })
     docs.unpersist()
     spark.table(resultTable)
   }

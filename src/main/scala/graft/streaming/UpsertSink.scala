@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.operators.Relational
 
 /** Streaming keyed upsert — the foreachBatch MERGE pattern: each
@@ -41,26 +41,26 @@ object UpsertSink {
           batch.select(cur.columns.map(col).toIndexedSeq: _*))
         Relational.latestPerGroup(all, Seq(key), order)
       } else Relational.latestPerGroup(batch, Seq(key), order)
-    merged.write.mode(SaveMode.Overwrite).format("parquet")
+    stagedOverwrite(merged, table)
+  }
+
+  /** Overwrite managed parquet `table` with `df`, which may read
+    * `table` itself, through a dropped-after `<table>_stage` copy. */
+  def stagedOverwrite(df: DataFrame, table: String): Unit = {
+    val spark = df.sparkSession
+    df.write.mode(SaveMode.Overwrite).format("parquet")
       .saveAsTable(s"${table}_stage")
     spark.table(s"${table}_stage").write.mode(SaveMode.Overwrite)
       .format("parquet").saveAsTable(table)
     spark.sql(s"DROP TABLE ${table}_stage")
   }
 
-  /** Drive a stream into the upsert table; AvailableNow processes the
-    * current backlog then stops (the batch-catchup trigger). */
+  /** Drain a stream into the upsert table ([[EventStream.drain]]:
+    * the current backlog, then stop) and return the finished query. */
   def run(stream: DataFrame, table: String, key: String, ord: String,
           checkpoint: String, tieBreak: Seq[String] = Nil): StreamingQuery =
-    // state-partition sizing rule (EventStream.StatePartitions): the
-    // captured conf also scopes the foreachBatch merge's window shuffle
-    // to the micro-batch's actual volume
-    EventStream.withStatePartitions(stream.sparkSession) {
-      stream.writeStream
-        .foreachBatch((b: DataFrame, _: Long) =>
-          upsertBatch(b, table, key, ord, tieBreak))
-        .option("checkpointLocation", checkpoint)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    }
+    EventStream.drain(stream.sparkSession)(stream.writeStream
+      .foreachBatch((b: DataFrame, _: Long) =>
+        upsertBatch(b, table, key, ord, tieBreak))
+      .option("checkpointLocation", checkpoint))
 }
