@@ -26,6 +26,21 @@ trait Alert {
   def family: StructType
   def keyCols: Seq[String]
   def build(spark: SparkSession): DataFrame
+
+  private val cachedFrames = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
+
+  /** Cache `df` for reuse within `build` (one frame feeding both an aux
+    * side-table and the alert rows); [[release]] unpersists it. */
+  protected def cachedForBuild(df: DataFrame): DataFrame = {
+    cachedFrames.add(df)
+    df.cache()
+  }
+
+  /** Unpersist what `build` cached. The harness calls it once the
+    * detector's rows are staged, so a run leaves the session's cache as
+    * it found it. */
+  def release(): Unit =
+    Iterator.continually(cachedFrames.poll()).takeWhile(_ != null).foreach(_.unpersist())
 }
 
 /** Pure conform step: sigla injection, composite `alrt_key`
@@ -53,11 +68,19 @@ object AlertConform {
   }
 }
 
-/** Alert lifecycle harness: per-alert conform+append into a temp table,
-  * then final-table overwrite and month-partitioned history merge.
+/** Alert lifecycle harness: each detector's conformed rows are staged
+  * in a table of their own (`temp_<table>__<sigla>`), then a family's
+  * staged tables are read together for the final-table overwrite and
+  * the month-partitioned history merge.
   *
   * Re-expresses the reference's `AlertaSession` lifecycle
   * (src/alertas/jobs.py:258-320) Spark-first:
+  *  - the reference appends every alert of a family to one temp table;
+  *    here each detector overwrites its own staging table, so detectors
+  *    can stage side by side ([[AlertRegistry.runAll]]): concurrent
+  *    appends to one table path share the file committer's
+  *    `_temporary/0` directory, which the first job to commit deletes
+  *    under the others;
   *  - sigla injection + composite `alrt_key` (jobs.py:262-271) are
   *    codegen'd column expressions, not a Python UDF round-trip;
   *  - the history merge keeps the reference's read-modify-write month
@@ -68,7 +91,7 @@ object AlertConform {
   *    reference (20 temp / 3 final+hist, jobs.py:277,293,315) — at
   *    100 TB these become per-partition targets sized by AQE instead.
   */
-class AlertHarness(spark: SparkSession, schema: String, clock: RunClock,
+class AlertHarness(val spark: SparkSession, val schema: String, clock: RunClock,
                    keyHash: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
                      graft.core.AlertKey.limpaSha1,
                    metadataHook: graft.sources.MetadataHook =
@@ -88,32 +111,56 @@ class AlertHarness(spark: SparkSession, schema: String, clock: RunClock,
                      * the default no-op. */
                    faultInjector: String => Unit = _ => ()) {
 
+  /** The one temp table per family that runs used before per-detector
+    * staging; [[dropTemps]] still clears it. */
   def tempName(table: String) = s"$schema.temp_$table"
   def histName(table: String) = s"$schema.hist_$table"
   def finalName(table: String) = s"$schema.$table"
 
+  private def stagePrefix(table: String) = s"temp_${table}__".toLowerCase
+  private def stagedName(table: String, sigla: String) =
+    s"$schema.${stagePrefix(table)}${sigla.toLowerCase}"
+
+  /** Every staging table of `table`'s family in the schema, found by
+    * name, so a re-run or another harness instance finds what an
+    * earlier one left. */
+  def stagedTables(table: String): Seq[String] =
+    spark.sql(s"SHOW TABLES IN $schema LIKE '${stagePrefix(table)}*'").collect()
+      .filterNot(_.getAs[Boolean]("isTemporary"))
+      .map(r => s"$schema.${r.getAs[String]("tableName")}").toSeq.sorted
+
   spark.sql(s"CREATE DATABASE IF NOT EXISTS $schema")
 
-  /** Conform one alert result and append it to its family temp table
-    * (reference generateAlerta, jobs.py:258-277). Returns the conformed
-    * frame (also the unit-test surface). */
+  /** A [[Timed]] phase whose Spark jobs carry its name. */
+  private def phase[T](name: String)(body: => T): T =
+    Timed.phase(name, timerSink)(Timed.described(spark, name)(body))
+
+  /** Conform one alert result (reference generateAlerta,
+    * jobs.py:258-277). Returns the conformed frame (also the unit-test
+    * surface). */
   def conformAlert(alert: Alert): DataFrame =
     AlertConform(alert.build(spark), alert.sigla, alert.family,
       alert.keyCols, keyHash)
 
+  /** Stage one detector's conformed rows in its own table of `table`'s
+    * family, replacing what an earlier run staged there. */
   def appendTemp(alert: Alert, table: String): Unit =
     // per-alert wall-clock, the reference's `with Timer():` around each
     // alert build (jobs.py:189,260)
-    Timed.phase(s"alert ${alert.sigla}", timerSink) {
-      conformAlert(alert).coalesce(4).write.mode(SaveMode.Append)
-        .format("parquet").saveAsTable(tempName(table))
+    phase(s"alert ${alert.sigla}") {
+      try conformAlert(alert).coalesce(4).write.mode(SaveMode.Overwrite)
+        .format("parquet").saveAsTable(stagedName(table, alert.sigla))
+      finally alert.release()
     }
 
   /** Final + history writer (reference write_dataframe, jobs.py:284-320),
-    * timed like the reference's write stage (jobs.py:286). */
-  def finalize(table: String): Unit = Timed.phase(s"write $table", timerSink) {
-    spark.catalog.clearCache()
-    val temp = spark.table(tempName(table))
+    * timed like the reference's write stage (jobs.py:286). Reads every
+    * table staged for the family and drops them once history is
+    * written. */
+  def finalize(table: String): Unit = phase(s"write $table") {
+    val staged = stagedTables(table)
+    require(staged.nonEmpty, s"no alerts staged for $table in $schema")
+    val temp = staged.map(spark.table).reduce(_ unionByName _)
 
     temp.repartition(3).write.mode(SaveMode.Overwrite)
       .format("parquet").saveAsTable(finalName(table))
@@ -148,14 +195,16 @@ class AlertHarness(spark: SparkSession, schema: String, clock: RunClock,
       todays.coalesce(3).write.partitionBy("dt_partition")
         .format("parquet").saveAsTable(hist)
     }
-    spark.sql(s"DROP TABLE ${tempName(table)}")
+    staged.foreach(t => spark.sql(s"DROP TABLE $t"))
     // external metadata caches (S12): tell downstream engines both
     // rewritten tables exist anew (reference utils.py:8-24 seam)
     metadataHook.tableWritten(finalName(table))
     metadataHook.tableWritten(hist)
   }
 
-  /** Drop leftover temp tables (reference jobs.py:140-141 hygiene). */
+  /** Drop leftover staging tables of the listed families, and their
+    * old single temp tables (reference jobs.py:140-141 hygiene). */
   def dropTemps(tables: Seq[String]): Unit =
-    tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS ${tempName(t)}"))
+    tables.flatMap(t => stagedTables(t) :+ tempName(t))
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
 }

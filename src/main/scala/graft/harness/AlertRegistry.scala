@@ -91,19 +91,59 @@ object AlertRegistry {
 
   /** Full run over registered entity views — the reference's
     * generateAlertas lifecycle (jobs.py:187-256): temp hygiene, the
-    * cached documentos_ativos spine, per-alert conform+append, then
-    * the final/hist writer per family table. */
+    * cached documentos_ativos spine, per-alert conform+stage, then the
+    * final/hist writer per family table. The reference runs its
+    * detectors one after another; they share no state, so here they
+    * all run at once, and then so do the family writes: over small
+    * inputs a run is mostly per-job latency and planning time, which
+    * overlap. */
   def runAll(spark: SparkSession, schema: String, clock: RunClock,
              includeDisabled: Boolean = false,
-             prescricaoLimiar: Int = 90): Unit = {
-    val harness = new AlertHarness(spark, schema, clock)
-    val alerts = enabled(clock, schema, prescricaoLimiar) ++
-      (if (includeDisabled) disabled(clock) else Seq.empty)
+             prescricaoLimiar: Int = 90): Unit =
+    runDetectors(new AlertHarness(spark, schema, clock),
+      enabled(clock, schema, prescricaoLimiar) ++
+        (if (includeDisabled) disabled(clock) else Seq.empty))
+
+  /** [[runAll]]'s lifecycle over any detector list. A detector that
+    * throws fails the run once every other detector has finished, with
+    * its own exception and before any final or history table is
+    * touched; the next run's temp hygiene clears what was staged. */
+  private[graft] def runDetectors(harness: AlertHarness,
+                                  alerts: Seq[(Alert, String)]): Unit = {
+    val spark = harness.spark
     val tables = alerts.map(_._2).distinct
     harness.dropTemps(tables)
-    ActiveDocs.registerCached(spark)
-    alerts.foreach { case (alert, table) => harness.appendTemp(alert, table) }
-    tables.foreach(harness.finalize)
-    writeTypesTable(spark, schema)
+    val spine = Timed.described(spark, "spine")(ActiveDocs.registerCached(spark))
+    try allAtOnce("graft-alert",
+      alerts.map { case (alert, table) => () => harness.appendTemp(alert, table) })
+    finally spine.unpersist()
+    allAtOnce("graft-write", tables.map(t => () => harness.finalize(t)) :+
+      (() => Timed.described(spark, s"write $TypesTable")(
+        writeTypesTable(spark, harness.schema))))
+  }
+
+  /** Run every task at once, each on a daemon thread made for this call,
+    * and return once all have ended; then rethrow the first failure (in
+    * task order), with any others suppressed on it. Threads made here
+    * inherit the caller's `Console.out`, Spark local properties and
+    * active session; a pool that outlived the call would keep whatever
+    * its threads saw first. */
+  private[graft] def allAtOnce(name: String, tasks: Seq[() => Unit]): Unit = {
+    val failures = new Array[Throwable](tasks.size)
+    val threads = tasks.indices.map { i =>
+      val t = new Thread(() =>
+        try tasks(i)() catch { case e: Throwable => failures(i) = e }, s"$name-$i")
+      t.setDaemon(true)
+      t
+    }
+    // join publishes each thread's failure slot to this one
+    try threads.foreach(_.start())
+    finally threads.foreach(_.join())
+    failures.filter(_ != null).toList match {
+      case first :: rest =>
+        rest.filterNot(_ eq first).foreach(first.addSuppressed)
+        throw first
+      case Nil => ()
+    }
   }
 }

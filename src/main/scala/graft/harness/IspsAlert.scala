@@ -112,7 +112,7 @@ class IspsAlert(auxTable: Option[String] = None) extends Alert {
     }
 
     val todos = agua.union(esgoto).union(drenagem)
-    val resultados = spark.table("atualizacao_pj_pacote")
+    val resultados = cachedForBuild(spark.table("atualizacao_pj_pacote")
       .filter(col("cod_pct").isin(packages: _*))
       .join(spark.table("institucional_orgaos_meio_ambiente"),
         col("cod_orgao") === col("id_orgao"))
@@ -124,8 +124,7 @@ class IspsAlert(auxTable: Option[String] = None) extends Alert {
         lit(anoReferencia).cast("int").as("isps_ano_referencia"))
       .withColumn("alrt_key",
         graft.core.AlertKey.uuidsha(col("isps_indicador"), col("isps_municipio"),
-          col("isps_ano_referencia")))
-      .cache()
+          col("isps_ano_referencia"))))
 
     auxTable.foreach(t => resultados.write.mode(SaveMode.Append)
       .format("parquet").saveAsTable(t))

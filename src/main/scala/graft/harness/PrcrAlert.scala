@@ -163,13 +163,12 @@ class PrcrAlert(clock: RunClock, limiar: Int = 90,
       .withColumn("dt_acordo_npp", col("pcao_dt_andamento"))
 
     // 6. prescription date + elapsed; cached reuse point (prcr.py:159-167)
-    val tempo = dtInicial
+    val tempo = cachedForBuild(dtInicial
       .withColumn("data_prescricao",
         add_months(col("dt_inicial_prescricao"),
           (col("tempo_prescricao_fatorado") * 12).cast("int")).cast("timestamp"))
       .withColumn("elapsed",
-        datediff(today, col("data_prescricao")).cast("int"))
-      .cache()
+        datediff(today, col("data_prescricao")).cast("int")))
 
     // detail side-table (prcr.py:170-198)
     auxTable.foreach { t =>
