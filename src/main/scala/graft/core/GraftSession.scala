@@ -15,6 +15,9 @@ import org.apache.spark.sql.SparkSession
   *     across engines (oracle comparisons, cluster nodes)
   *   - nanosAsLong so TIMESTAMP(NANOS) parquet (events.ts) is readable;
   *     Tables.load rebuilds a proper timestamp column.
+  *
+  * Scale override: `spark.conf.set("spark.sql.shuffle.partitions", n)`
+  * on the built session.
   */
 object GraftSession {
   /** `hive = true` mirrors the reference's Hive-enabled bootstrap
@@ -28,30 +31,10 @@ object GraftSession {
       .master(s"local[$cores]")
       // library SQL surface: slugify / cosine_sim as native functions
       .config("spark.sql.extensions", "graft.GraftExtensions")
-      // default: one shuffle partition per core; override with
-      // GRAFT_SHUFFLE_PARTITIONS when per-partition shuffle volume is
-      // the binding term (the cluster-sizing rule below — ~2-3x total
-      // cores, AQE coalesces down — applied locally; measured effect
-      // on the 212M-pair q33 shuffle in SCALE.md "Measured scaling")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("GRAFT_SHUFFLE_PARTITIONS", cores.toString))
+      // one shuffle partition per core; AQE coalesces down from here
+      .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // START WIDE, COALESCE DOWN — the volume-sizing escape hatch:
-      // GRAFT_INITIAL_PARTITIONS widens every shuffle's initial
-      // width while AQE merges small outputs back to the advisory
-      // size. Measured BOTH ways at sf0.1↔100× (SCALE.md round-10
-      // "initial-partition floor"): at 100× a 32-partition window
-      // sort spills (q144 demo 104.8s → 11.7s at 256), but a
-      // STATIC 8×-cores default taxed the whole sf0.1 bench 1.43×
-      // (tiny shuffles pay the 256-task map-side cost, and
-      // localCheckpoint barriers freeze the wide layout past AQE's
-      // reach) — so the default stays 1× cores and the width knob
-      // scales with the data, exactly like the cluster rule
-      // (~2-3× total cores at 100 TB) scales with the cluster
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("GRAFT_INITIAL_PARTITIONS",
-          sys.env.getOrElse("GRAFT_SHUFFLE_PARTITIONS", cores.toString)))
       // deliberate scale choice (not left to version defaults): inject
       // a bloom filter built from the small side of a shuffle join to
       // prune the probe side's scan/shuffle — the runtime complement

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import GraftCheckpoint.barrier
 import graft.functions.PortableHash._
 
 /** Deduplication operators for a training-data pipeline: exact,
@@ -480,7 +481,6 @@ object Dedup {
     * exactly. */
   def minhashComponents(sigs: DataFrame, idCol: String, k: Int,
                         bands: Int,
-                        checkpointDir: Option[String] = None,
                         minAgree: Option[Int] = None): DataFrame = {
     // with verification the signature frame feeds THREE consumers
     // (banding + both verify-join sides) — materialize it once or the
@@ -532,8 +532,7 @@ object Dedup {
           .filter(sigAgreement(k) >= th)
           .select(col("id_a"), col("id_b"))
     }
-    connectedComponents(edges, "id_a", "id_b",
-      checkpointDir = checkpointDir)
+    connectedComponents(edges, "id_a", "id_b")
   }
 
   /** Connected components over candidate pairs: every doc in a
@@ -551,26 +550,14 @@ object Dedup {
     * matters); convergence detected by counting changed labels, one
     * action per round.
     *
-    * Failure domains: by default each round uses `localCheckpoint` —
-    * blocks live on executors only, which is fast and fine in local
-    * mode but on a real cluster one lost executor kills the whole
-    * iteration (no lineage left to recompute from). Pass
-    * `checkpointDir` (a fault-tolerant FS path, e.g. HDFS/S3) to use
-    * reliable `checkpoint()` instead: each round's labels persist to
-    * stable storage and the iteration survives executor loss — the
-    * production setting for a 100 TB run. (Spark has ONE checkpoint
-    * dir per context; [[GraftCheckpoint.ensureDir]] sets it
-    * idempotently — use one reliable dir per session.)
-    *
     * Thread-safe w.r.t. concurrent queries: per-round parallelism
     * comes from AQE's runtime partition coalescing (the dup graph is
     * orders of magnitude smaller than the corpus, so each round's
     * shuffles coalesce to graph-sized partition counts automatically)
     * — the session-global shuffle-partition conf is never mutated. */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
-                          maxIter: Int = 20,
-                          checkpointDir: Option[String] = None): DataFrame =
-    connectedComponentsStats(pairs, aCol, bCol, maxIter, checkpointDir)._1
+                          maxIter: Int = 20): DataFrame =
+    connectedComponentsStats(pairs, aCol, bCol, maxIter)._1
 
   /** Edge-count threshold below which [[connectedComponentsStats]]
     * solves the graph with a driver-side union-find instead of the
@@ -593,7 +580,6 @@ object Dedup {
     * pointer-jumping bound on a planted chain). */
   def connectedComponentsStats(pairs: DataFrame, aCol: String, bCol: String,
                           maxIter: Int = 20,
-                          checkpointDir: Option[String] = None,
                           driverThreshold: Long = DefaultDriverCcEdges): (DataFrame, Int) = {
     // materialize the pair input ONCE before the union reads it twice:
     // two union branches scanning an unmaterialized lineage in one job
@@ -659,12 +645,6 @@ object Dedup {
     val edges = allEdges.repartition(nParts, col("src")).cache()
     edges.count()
     allEdges.unpersist()
-    val spark = pairs.sparkSession
-    checkpointDir.foreach(d => GraftCheckpoint.ensureDir(spark, d))
-    // reliable checkpoint when a dir is given (survives executor loss);
-    // executor-local blocks otherwise (fast path, local mode / tests)
-    def barrier(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint() else df.localCheckpoint()
     var labels = barrier(edges.select(col("src").as("node")).distinct()
       .withColumn("comp", col("node")))
     var iter = 0
@@ -851,21 +831,11 @@ object Dedup {
     * the band rows into the single bucket join, so agreement is a
     * map-side filter on the join output — the dense-bucket hit stream
     * is consumed inside one codegen stage and never crosses the wire.
-    * Same rows, same rule, same output; 100× wall 38.4s → ~8s.
-    *
-    * `checkpointDir`: reliable-FS checkpoint path (HDFS/S3) for the
-    * barriers — executor-local blocks die with an executor; at
-    * cluster scale pass a dir (same contract as
-    * [[connectedComponents]]). Local default is the fast path. */
+    * Same rows, same rule, same output; 100× wall 38.4s → ~8s. */
   def incrementalDedup(newBatch: DataFrame, idCol: String, textCol: String,
                        seenDigests: DataFrame, seenBands: DataFrame,
                        k: Int, bands: Int,
-                       minAgree: Option[Int] = None,
-                       checkpointDir: Option[String] = None): DataFrame = {
-    checkpointDir.foreach(d =>
-      GraftCheckpoint.ensureDir(newBatch.sparkSession, d))
-    def barrier(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint() else df.localCheckpoint()
+                       minAgree: Option[Int] = None): DataFrame = {
     val hashed = newBatch.withColumn("__ch", md5(col(textCol)))
     // within-batch exact dedup: canonical row = min id per digest
     // (same shape as [[exact]]'s keep rule)
@@ -989,18 +959,9 @@ object Dedup {
     * filter, both join sides) and `filtered` twice — eager
     * `localCheckpoint` truncates each to a block scan (a `.cache()`
     * alone left the explode subtree re-planned at every reference:
-    * 142 codegen stages at sf0.1, the round-5 finding).
-    *
-    * `checkpointDir`: reliable-FS path (HDFS/S3) for those barriers —
-    * executor-local blocks die with their executor, and the truncated
-    * lineage cannot recompute them; at cluster scale pass a dir (the
-    * [[connectedComponents]] contract). Local default = fast path. */
+    * 142 codegen stages at sf0.1, the round-5 finding). */
   def ngramJaccard(df: DataFrame, idCol: String, textCol: String,
-                   n: Int, maxDocFreq: Int, minJaccard: Double,
-                   checkpointDir: Option[String] = None): DataFrame = {
-    checkpointDir.foreach(d => GraftCheckpoint.ensureDir(df.sparkSession, d))
-    def barrier(b: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) b.checkpoint() else b.localCheckpoint()
+                   n: Int, maxDocFreq: Int, minJaccard: Double): DataFrame = {
     val shingles = barrier(df
       .select(col(idCol), split(col(textCol), " ").as("ws"))
       .filter(size(col("ws")) >= n)
@@ -1084,15 +1045,10 @@ object Dedup {
     * The three barriers ([[GraftCheckpoint]] contract as everywhere):
     * `toks` feeds the frequency aggregate and the ranked index;
     * `dict` feeds the index and both verification sides; `prefix`
-    * feeds both sides of the candidate self-join. `checkpointDir` =
-    * reliable-FS path at cluster scale. */
+    * feeds both sides of the candidate self-join. */
   def prefixFilterJoin(df: DataFrame, idCol: String, textCol: String,
-                       minJaccard: Double,
-                       checkpointDir: Option[String] = None): DataFrame = {
+                       minJaccard: Double): DataFrame = {
     require(minJaccard > 0 && minJaccard <= 1, "threshold in (0, 1]")
-    checkpointDir.foreach(d => GraftCheckpoint.ensureDir(df.sparkSession, d))
-    def barrier(b: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) b.checkpoint() else b.localCheckpoint()
     val toks = barrier(df
       .select(col(idCol), explode(split(col(textCol), " ")).as("t"))
       .filter(col("t") =!= "").distinct())

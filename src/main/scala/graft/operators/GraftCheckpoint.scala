@@ -1,25 +1,25 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graftext.DatasetFactory
 
-/** Idempotent reliable-checkpoint-dir setup shared by the iterative
-  * operators ([[Dedup.connectedComponents]], [[Similarity.kmeansCells]]).
-  *
-  * `SparkContext.setCheckpointDir` stores a QUALIFIED
-  * `<scheme>://<dir>/<random-uuid>` path, so a naive
-  * `getCheckpointDir.contains(dir)` equality guard never matches and
-  * every call would re-set the session-global dir (and mkdir a fresh
-  * UUID subdir). This guard matches on the requested prefix instead, so
-  * repeated calls with the same dir are no-ops; a call with a DIFFERENT
-  * dir still re-points the session-global setting — that mutation is
-  * inherent to Spark's one-checkpoint-dir-per-context model and is
-  * documented at both call sites (use one reliable dir per session).
+/** Lineage-truncating barriers for the iterative operators. The mode
+  * comes from the SparkContext, not from the caller: when a checkpoint
+  * dir is set (`--conf spark.checkpoint.dir=…` or
+  * `sc.setCheckpointDir`), every barrier is a reliable `checkpoint()`
+  * that survives executor loss; otherwise it is a `localCheckpoint()`,
+  * whose executor-local blocks are fast but die with their executor.
   */
 object GraftCheckpoint {
+
+  /** Eagerly materialize `df` and truncate its lineage, reliably when
+    * the context has a checkpoint dir. */
+  def barrier(df: DataFrame): DataFrame =
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
+    else df.localCheckpoint()
 
   /** Materialize `df` hash-partitioned on `keys` so that DOWNSTREAM
     * keyed operators (joins, aggregates on the same keys) reuse the
@@ -40,20 +40,11 @@ object GraftCheckpoint {
     * the `n` hash buckets — and then declares that shuffle's
     * `HashPartitioning` on the checkpoint's LogicalRDD. Consumers see
     * 0 exchanges on the keyed path, and no session conf is touched.
-    *
-    * `reliable = true` uses the reliable-FS `checkpoint()` barrier
-    * (cluster mode, [[ensureDir]] must have run); note reliable
-    * checkpoints never recorded partitioning in the first place, so
-    * the repartition stays immediately upstream and the one exchange
-    * per consumer is the known cost of that mode. */
-  def partitionedBarrier(df: org.apache.spark.sql.DataFrame,
-                         keys: Seq[String],
-                         reliable: Boolean = false,
-                         pinMin: Int = PinMinPartitions):
-      org.apache.spark.sql.DataFrame = {
+    * Both materializations are [[barrier]]s, so a reliable checkpoint
+    * keeps the same one-to-one partition layout and the same pin. */
+  def partitionedBarrier(df: DataFrame, keys: Seq[String],
+                         pinMin: Int = PinMinPartitions): DataFrame = {
     val spark = df.sparkSession
-    if (reliable)
-      return df.repartition(keys.map(col): _*).checkpoint()
     // Materialize ONCE under AQE: its coalescing picks a width that
     // tracks the frame's actual bytes (the scale-adaptive sizing
     // rule). Whether to PIN a hash(keys) layout is then a size
@@ -76,11 +67,11 @@ object GraftCheckpoint {
     // Below the gate the caller then shares ONE copy instead of
     // paying a redundant copy per requested layout (round 18).
     val bare = df.queryExecution.analyzed.isInstanceOf[LogicalRDD]
-    val once = if (bare) df else df.localCheckpoint(true)
+    val once = if (bare) df else barrier(df)
     val n = math.max(1, once.rdd.getNumPartitions)
     if (n < pinMin) return once
     val shuffle = once.repartition(n, keys.map(col): _*)
-    val pinned = shuffle.localCheckpoint(true)
+    val pinned = barrier(shuffle)
     (shuffle.queryExecution.analyzed, pinned.queryExecution.analyzed) match {
       case (r: RepartitionByExpression, ck: LogicalRDD)
           if ck.rdd.getNumPartitions == n =>
@@ -95,20 +86,4 @@ object GraftCheckpoint {
     * cheap and pinning is pure overhead; above it the per-iteration
     * exchange grows linearly while the pin stays one pass). */
   private[graft] val PinMinPartitions = 4
-
-  def ensureDir(spark: SparkSession, dir: String): Unit = synchronized {
-    // Match on the slash-terminated prefix ONLY: a bare startsWith(dir)
-    // would let /data/ckpt-old satisfy a request for /data/ck (string
-    // prefix, different directory) and silently keep checkpoints in the
-    // wrong place. The stored dir is always <requested>/<uuid>, so the
-    // slash-terminated form is both necessary and sufficient.
-    val want = dir.stripSuffix("/") + "/"
-    val already = spark.sparkContext.getCheckpointDir.exists { q =>
-      val plain = q.replaceFirst("^[a-zA-Z][a-zA-Z0-9+.-]*:(//)?", "/")
-        .replaceFirst("^/+", "/")
-      (q.stripSuffix("/") + "/").startsWith(want) ||
-        (plain.stripSuffix("/") + "/").startsWith(want)
-    }
-    if (!already) spark.sparkContext.setCheckpointDir(dir)
-  }
 }

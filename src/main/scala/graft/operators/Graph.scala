@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import GraftCheckpoint.{barrier, partitionedBarrier}
 
 /** Link-graph operators for crawl-corpus curation. A web-scale corpus
   * pipeline ranks hosts/pages by link centrality (the Common Crawl
@@ -38,27 +39,10 @@ object Graph {
     * exchange only the rank/contribution side; the edge list — the
     * largest frame in the loop — never crosses the wire again after
     * round 0 (round 9, measured: 3.5 → ~2.5s at sf0.1, the removed
-    * exchanges being iters × |edges|).
-    *
-    * `checkpointDir`: reliable-FS path (HDFS/S3) for the barriers.
-    * Executor-local checkpoint blocks die with their executor, and an
-    * iterative job whose statics are pinned to lost blocks cannot
-    * recompute them (lineage is truncated) — at cluster scale pass a
-    * dir, exactly as [[Dedup.connectedComponents]] /
-    * [[graft.operators.Similarity]]'s kmeansCells take one. The local
-    * default keeps the fast executor-memory path for tests/local mode.
-    * (Reliable `checkpoint()` repartitions nothing but does not
-    * preserve a partitioner hint the way LogicalRDD does — the
-    * repartition stays ahead of the barrier in both modes, so round
-    * joins reuse the exchange either way.) */
+    * exchanges being iters × |edges|). */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
-               iters: Int, damping: Double = 0.85,
-               checkpointDir: Option[String] = None): DataFrame = {
+               iters: Int, damping: Double = 0.85): DataFrame = {
     require(iters >= 1, "at least one iteration")
-    checkpointDir.foreach(d =>
-      GraftCheckpoint.ensureDir(edges.sparkSession, d))
-    def barrier(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint() else df.localCheckpoint()
     val e0 = barrier(edges
       .select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
@@ -68,19 +52,17 @@ object Graph {
     // form silently re-exchanged BOTH statics every round on Spark 4 —
     // the AQE-scoped barrier restores the recorded HashPartitioning
     // this loop's shape was measured on (round 9)
-    val nodes = GraftCheckpoint.partitionedBarrier(
+    val nodes = partitionedBarrier(
       e0.select(col("src").as("node"))
         .union(e0.select(col("dst").as("node")))
         .distinct(),
-      Seq("node"), reliable = checkpointDir.isDefined)
+      Seq("node"))
     val deg = e0.groupBy(col("src")).agg(count(lit(1)).as("__deg"))
     // out-degree folded onto the edge list ONCE: the per-round plan
     // then joins ranks only, one join instead of two per iteration
     // (the division stays per-row — rank / deg, bit-identical to the
     // unfolded form and to the oracle's)
-    val e = GraftCheckpoint.partitionedBarrier(
-      e0.join(deg, Seq("src")), Seq("src"),
-      reliable = checkpointDir.isDefined)
+    val e = partitionedBarrier(e0.join(deg, Seq("src")), Seq("src"))
     // Deliberate SHUFFLED-HASH joins in the loop (round 18, guide
     // §3.1): with the statics pinned, the planner's default
     // SortMergeJoin satisfies its distribution from the recorded
@@ -146,16 +128,10 @@ object Graph {
     * authority-side join, so neither per-round join re-exchanges the
     * edges — each iteration moves only the score vector (two
     * shuffles: the dst and src aggregates; the max is a scalar
-    * broadcast). `checkpointDir` = reliable-FS barriers at cluster
-    * scale, exactly as [[pageRank]]. Output: (node, hub, auth). */
+    * broadcast). Output: (node, hub, auth). */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
-           iters: Int,
-           checkpointDir: Option[String] = None): DataFrame = {
+           iters: Int): DataFrame = {
     require(iters >= 1, "at least one iteration")
-    checkpointDir.foreach(d =>
-      GraftCheckpoint.ensureDir(edges.sparkSession, d))
-    def barrier(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint() else df.localCheckpoint()
     val e0 = barrier(edges
       .select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
@@ -163,15 +139,13 @@ object Graph {
     // partitionedBarrier (round 17): see [[pageRank]] — the plain
     // repartition+localCheckpoint form lost its recorded partitioning
     // under AQE and re-exchanged both edge copies every round
-    val nodes = GraftCheckpoint.partitionedBarrier(
+    val nodes = partitionedBarrier(
       e0.select(col("src").as("node"))
         .union(e0.select(col("dst").as("node")))
         .distinct(),
-      Seq("node"), reliable = checkpointDir.isDefined)
-    val eBySrc = GraftCheckpoint.partitionedBarrier(e0, Seq("src"),
-      reliable = checkpointDir.isDefined)
-    val eByDst = GraftCheckpoint.partitionedBarrier(e0, Seq("dst"),
-      reliable = checkpointDir.isDefined)
+      Seq("node"))
+    val eBySrc = partitionedBarrier(e0, Seq("src"))
+    val eByDst = partitionedBarrier(e0, Seq("dst"))
     var hubs = nodes.withColumn("hub", lit(1.0))
     var aRaw: DataFrame = null
     // shuffled-hash hints: see [[pageRank]]'s loop note — the score

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import GraftCheckpoint.barrier
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -175,8 +176,7 @@ object Similarity {
     * touches only its `nProbe` probed cells. Contract: bench and
     * train must be id-disjoint slices (no self-exclusion is
     * applied — a shared id would match itself at sim 1.0).
-    * `checkpointDir` = reliable-FS Lloyd barriers at cluster
-    * scale. Output: (idCol, max_train_sim, contaminated), one row
+    * Output: (idCol, max_train_sim, contaminated), one row
     * per bench vector. Probing is approximate exactly as IVF
     * search is: the oracle replays the same trained cells and
     * probe rule, so the demo checks the DESIGN, not a weaker
@@ -184,10 +184,9 @@ object Similarity {
   def semanticContamination(bench: DataFrame, train: DataFrame,
                             idCol: String, vecCol: String,
                             threshold: Double, k: Int, iters: Int,
-                            nProbe: Int,
-                            checkpointDir: Option[String] = None): DataFrame = {
+                            nProbe: Int): DataFrame = {
     val dim = 64
-    val cells = kmeansCells(train, idCol, vecCol, k, iters, checkpointDir)
+    val cells = kmeansCells(train, idCol, vecCol, k, iters)
     val t = train.join(cells, Seq(idCol))
     val centAggs = (0 until dim).map(i =>
       round(avg(element_at(asDouble(col(vecCol)), i + 1)), 6).as(s"c_$i"))
@@ -223,20 +222,12 @@ object Similarity {
     * as a broadcast of the k centroids against the streaming corpus
     * (|n|·k scoring, no corpus shuffle). Centroids and scores are
     * rounded so assignment is independent of distributed sum order;
-    * per-iteration checkpoint truncates the growing lineage (same
-    * discipline as [[Dedup.connectedComponents]]): `localCheckpoint`
-    * by default (executor-local blocks — fast, but an executor loss
-    * kills the iteration), or reliable `checkpoint()` to a
-    * fault-tolerant FS when `checkpointDir` is given — the production
-    * setting for a large cluster.
+    * per-iteration [[GraftCheckpoint.barrier]] truncates the growing
+    * lineage (same discipline as [[Dedup.connectedComponents]]).
     *
     * Returns (idCol, cell) — feed to [[ivfTopK]] as its `cellCol`. */
   def kmeansCells(df: DataFrame, idCol: String, vecCol: String,
-                  k: Int, iters: Int,
-                  checkpointDir: Option[String] = None): DataFrame = {
-    checkpointDir.foreach(d => GraftCheckpoint.ensureDir(df.sparkSession, d))
-    def barrier(d: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) d.checkpoint() else d.localCheckpoint()
+                  k: Int, iters: Int): DataFrame = {
     val vecs = df.select(col(idCol).as("kid"),
       col(vecCol).cast("array<float>").as("kvf"),
       asDouble(col(vecCol)).as("kv"))

@@ -302,13 +302,11 @@ object Warc {
       if (kept != null) Some(kept.toIndexedSeq) else None))
   }
 
-  /** Decompressed-retention budget for the fused walk (bytes);
-    * `GRAFT_GZ_KEEP_BUDGET_MB` tunes it (0 forces the strict two-pass
-    * protocol everywhere). 64 MB covers every record-at-a-time member
-    * file by orders of magnitude while keeping whole-segment
-    * concatenations (~4 GB decompressed) on the two-pass path. */
-  private[graft] val GzKeepBudget: Long =
-    sys.env.getOrElse("GRAFT_GZ_KEEP_BUDGET_MB", "64").toLong << 20
+  /** Decompressed-retention budget for the fused walk (bytes). 64 MB
+    * covers every record-at-a-time member file by orders of magnitude
+    * while keeping whole-segment concatenations (~4 GB decompressed)
+    * on the two-pass path. */
+  private[graft] val GzKeepBudget: Long = 64L << 20
 
   /** PASS 2: inflate ONE already-verified member's raw-deflate bytes.
     * Called lazily per emitted row, so only one member's decompressed

@@ -19,10 +19,13 @@ class DedupSpec extends SparkTestBase {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
     val pairs = Seq((1, 2), (2, 3), (3, 7), (10, 11)).toDF("id_a", "id_b")
-    val comp = graft.operators.Dedup.connectedComponentsStats(pairs, "id_a", "id_b",
-        checkpointDir = Some(dir), driverThreshold = 0)._1
-      .collect().map(r => r.getInt(0) -> r.getInt(1)).toMap
+    val comp = withCheckpointDir(dir) {
+      graft.operators.Dedup.connectedComponentsStats(pairs, "id_a", "id_b",
+          driverThreshold = 0)._1
+        .collect().map(r => r.getInt(0) -> r.getInt(1)).toMap
+    }
     assert(comp == Map(1 -> 1, 2 -> 1, 3 -> 1, 7 -> 1, 10 -> 10, 11 -> 10))
+    assert(spark.sparkContext.getCheckpointDir.isEmpty)
     // the reliable path actually wrote checkpoint data to the dir
     val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
       .filter(p => java.nio.file.Files.isRegularFile(p)).count()
@@ -298,22 +301,39 @@ class DedupSpec extends SparkTestBase {
       11L -> "six five four three two one",
       12L -> "totally different fresh content here now")
     val (digests, bands) = Dedup.dedupState(seen, "doc_id", "text", 16, 2)
-    val viaLocal = Dedup.incrementalDedup(newBatch, "doc_id", "text",
+    def dedup() = Dedup.incrementalDedup(newBatch, "doc_id", "text",
         digests, bands, 16, 2, minAgree = Some(13))
       .select("doc_id").collect().map(_.getLong(0)).toSet
-    val viaReliable = Dedup.incrementalDedup(newBatch, "doc_id", "text",
-        digests, bands, 16, 2, minAgree = Some(13),
-        checkpointDir = Some(dir))
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(viaReliable == viaLocal && viaLocal == Set(12L))
     val jacDocs = docsDf(1L -> "a b c d e", 2L -> "a b c d e",
       3L -> "p q r s t")
-    val viaLocalJ = Dedup.ngramJaccard(jacDocs, "doc_id", "text", 3, 100, 0.0)
+    def jaccard() = Dedup.ngramJaccard(jacDocs, "doc_id", "text", 3, 100, 0.0)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val viaReliableJ = Dedup.ngramJaccard(jacDocs, "doc_id", "text", 3, 100,
-        0.0, checkpointDir = Some(dir))
+    // the other barrier users ride the same scope: prefixFilterJoin's
+    // three barriers, and semanticContamination's Lloyd rounds
+    // (kmeansCells)
+    val pfDocs = docsDf(1L -> "a b c d", 2L -> "a b c e", 3L -> "a f g h")
+    def prefix() = Dedup.prefixFilterJoin(pfDocs, "doc_id", "text", 0.6)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    def contamination() = {
+      import spark.implicits._
+      def oneHot(i: Int) = Array.tabulate(64)(j => if (j == i) 1f else 0f)
+      val train = Seq((100L, oneHot(0)), (101L, oneHot(1)),
+        (102L, oneHot(2))).toDF("vec_id", "embedding")
+      val bench = Seq((1L, oneHot(0)), (2L, oneHot(10)))
+        .toDF("vec_id", "embedding")
+      Similarity.semanticContamination(bench, train, "vec_id", "embedding",
+          threshold = 0.9, k = 2, iters = 2, nProbe = 2)
+        .collect().map(r => r.getLong(0) -> r.getBoolean(2)).toMap
+    }
+    val (viaLocal, viaLocalJ, viaLocalP, viaLocalS) =
+      (dedup(), jaccard(), prefix(), contamination())
+    val (viaReliable, viaReliableJ, viaReliableP, viaReliableS) =
+      withCheckpointDir(dir)((dedup(), jaccard(), prefix(), contamination()))
+    assert(spark.sparkContext.getCheckpointDir.isEmpty)
+    assert(viaReliable == viaLocal && viaLocal == Set(12L))
     assert(viaReliableJ == viaLocalJ && viaLocalJ == Set((1L, 2L)))
+    assert(viaReliableP == viaLocalP && viaLocalP == Set((1L, 2L)))
+    assert(viaReliableS == viaLocalS && viaLocalS == Map(1L -> true, 2L -> false))
     val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
       .filter(p => java.nio.file.Files.isRegularFile(p)).count()
     assert(wrote > 0, "expected reliable checkpoint files under the dir")

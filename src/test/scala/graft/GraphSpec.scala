@@ -51,13 +51,38 @@ class GraphSpec extends SparkTestBase {
       (7L, 8L)).toDF("src", "dst")
     // iters=4 so the periodic in-loop barrier (i % 3) also takes the
     // reliable path, not just the three static checkpoints
-    val local = Graph.pageRank(edges, "src", "dst", iters = 4)
+    def ranks() = Graph.pageRank(edges, "src", "dst", iters = 4)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val reliable = Graph.pageRank(edges, "src", "dst", iters = 4,
-        checkpointDir = Some(dir))
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    // hits and the classifier reach the barrier through
+    // partitionedBarrier; pinMin = 1 forces its pin path, which must
+    // keep the declared layout on a reliable checkpoint too
+    def scores() = Graph.hits(edges, "src", "dst", iters = 2)
+      .collect().map(r => r.getLong(0) -> ((r.getDouble(1), r.getDouble(2))))
+      .toMap
+    val docs = Seq((1L, "good clean prose good clean", true),
+      (2L, "spam junk noise spam junk", false)).toDF("doc_id", "text", "good")
+    def quality() = graft.operators.Classifier.logisticQuality(docs,
+        "doc_id", "text", col("good"), buckets = 16, iters = 2)
+      .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
+    // three input partitions, so a lost layout would show as an Exchange
+    val kv = (1 to 200).map(i => (i.toLong % 13, i.toLong)).toDF("k", "v")
+      .repartition(3)
+    def pinned() = {
+      val agg = graft.operators.GraftCheckpoint
+        .partitionedBarrier(kv, Seq("k"), pinMin = 1).groupBy("k").agg(sum("v"))
+      (agg.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap,
+        agg.queryExecution.executedPlan.toString)
+    }
+    val (local, localHits, localQ, (localPin, _)) =
+      (ranks(), scores(), quality(), pinned())
+    val (reliable, reliableHits, reliableQ, (reliablePin, pinPlan)) =
+      withCheckpointDir(dir)((ranks(), scores(), quality(), pinned()))
+    assert(spark.sparkContext.getCheckpointDir.isEmpty)
     assert(reliable == local,
       s"reliable-checkpoint path changed ranks: $reliable vs $local")
+    assert(reliableHits == localHits && reliableQ == localQ)
+    assert(reliablePin == localPin && !pinPlan.contains("Exchange"),
+      s"reliable pin lost its layout:\n$pinPlan")
     val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
       .filter(p => java.nio.file.Files.isRegularFile(p)).count()
     assert(wrote > 0, "expected reliable checkpoint files under the dir")
@@ -183,7 +208,7 @@ class GraphSpec extends SparkTestBase {
               s"round $round thread $t lost its pinned layout:\n$plan")
         }
       }
-      // the scoped conf is restored after the last barrier
+      // no barrier touched the session's AQE setting
       assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
     } finally pool.shutdown()
   }
