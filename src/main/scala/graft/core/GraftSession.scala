@@ -1,5 +1,6 @@
 package graft.core
 
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.SparkSession
 
 /** Session factory with the engine's standard tuning.
@@ -16,8 +17,8 @@ import org.apache.spark.sql.SparkSession
   *   - nanosAsLong so TIMESTAMP(NANOS) parquet (events.ts) is readable;
   *     Tables.load rebuilds a proper timestamp column.
   *
-  * Scale override: `spark.conf.set("spark.sql.shuffle.partitions", n)`
-  * on the built session.
+  * Scale override: `--conf spark.sql.shuffle.partitions=n` (or
+  * `-Dspark.sql.shuffle.partitions=n`) replaces the per-core width.
   */
 object GraftSession {
   /** `hive = true` mirrors the reference's Hive-enabled bootstrap
@@ -31,8 +32,10 @@ object GraftSession {
       .master(s"local[$cores]")
       // library SQL surface: slugify / cosine_sim as native functions
       .config("spark.sql.extensions", "graft.GraftExtensions")
-      // one shuffle partition per core; AQE coalesces down from here
-      .config("spark.sql.shuffle.partitions", cores.toString)
+      // one shuffle partition per core unless Spark's conf names a
+      // width (a builder option would override it); AQE coalesces down
+      .config("spark.sql.shuffle.partitions",
+        new SparkConf().get("spark.sql.shuffle.partitions", cores.toString))
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       // deliberate scale choice (not left to version defaults): inject

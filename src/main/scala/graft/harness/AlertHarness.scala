@@ -121,13 +121,11 @@ class AlertHarness(val spark: SparkSession, val schema: String, clock: RunClock,
   private def stagedName(table: String, sigla: String) =
     s"$schema.${stagePrefix(table)}${sigla.toLowerCase}"
 
-  /** Every staging table of the listed families in the schema, found
-    * by name in one catalog listing (`|` separates alternatives in a
-    * SHOW TABLES pattern), so a re-run or another harness instance
-    * finds what an earlier one left. */
-  def stagedTables(tables: String*): Seq[String] =
-    spark.sql(s"SHOW TABLES IN $schema LIKE " +
-        tables.map(t => s"${stagePrefix(t)}*").mkString("'", "|", "'")).collect()
+  /** Every staging table of `table`'s family in the schema, found by
+    * name, so a re-run or another harness instance finds what an
+    * earlier one left. */
+  def stagedTables(table: String): Seq[String] =
+    spark.sql(s"SHOW TABLES IN $schema LIKE '${stagePrefix(table)}*'").collect()
       .filterNot(_.getAs[Boolean]("isTemporary"))
       .map(r => s"$schema.${r.getAs[String]("tableName")}").toSeq.sorted
 
@@ -207,6 +205,6 @@ class AlertHarness(val spark: SparkSession, val schema: String, clock: RunClock,
   /** Drop leftover staging tables of the listed families, and their
     * old single temp tables (reference jobs.py:140-141 hygiene). */
   def dropTemps(tables: Seq[String]): Unit =
-    (stagedTables(tables: _*) ++ tables.map(tempName))
+    tables.flatMap(t => stagedTables(t) :+ tempName(t))
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
 }

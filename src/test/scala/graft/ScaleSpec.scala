@@ -56,6 +56,21 @@ class ScaleSpec extends SparkTestBase {
     }
   }
 
+  test("shuffle width: a width in Spark's conf replaces the per-core default") {
+    // -Dspark.sql.shuffle.partitions and spark-submit's --conf land in
+    // SparkConf; a builder option would override them. getOrCreate
+    // re-applies build's runtime options to this session, so the
+    // width is restored afterwards
+    val key = "spark.sql.shuffle.partitions"
+    val old = spark.conf.get(key)
+    try {
+      sys.props(key) = "7"
+      try assert(graft.core.GraftSession.build("graft-test", 4).conf.get(key) == "7")
+      finally sys.props -= key
+      assert(graft.core.GraftSession.build("graft-test", 4).conf.get(key) == "4")
+    } finally spark.conf.set(key, old)
+  }
+
   test("bloom semi join == exact semi join; probe sits before the join") {
     val o = Tables.load(spark, sfDir, "orders")
     val dim = Tables.load(spark, sfDir, "customer")
