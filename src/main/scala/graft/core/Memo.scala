@@ -11,10 +11,11 @@ import scala.util.Try
   * [[graft.operators.Similarity.pqOf]]).
   *
   * Lifecycle: the memoized value is typically an eager
-  * `localCheckpoint` (plan truncated to a block scan), whose blocks
-  * die with the SparkContext that wrote them. Callers therefore start
-  * every key with the context's `applicationId`: a restarted context
-  * recomputes instead of scanning dead blocks
+  * [[graft.operators.GraftCheckpoint.barrier]] (plan truncated to a
+  * block scan), whose blocks die with the SparkContext that wrote
+  * them. Callers therefore start every key with the context's
+  * `applicationId`: a restarted context recomputes instead of
+  * scanning dead blocks
   * (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND, seen when one test suite stops
   * the session and a later one rebuilds it), and the few dead entries
   * a restart strands hold only unreachable plans.

@@ -16,11 +16,11 @@ import org.apache.spark.sql.functions._
   *    shuffled/grouped is unchanged), ~3x less per-row hash CPU via
   *    Spark's codegen'd XxHash64 expression.
   *
-  * Select with `-Dgraft.hash.backend=xxhash64` (or env
-  * `GRAFT_HASH_BACKEND`); the correctness gate and bench harness run
-  * the default md5 so results stay oracle-comparable. The choice is
-  * read per expression build, so a test can exercise both backends in
-  * one JVM; it is process-global, not per-query.
+  * Select with `-Dgraft.hash.backend=xxhash64`; the correctness gate
+  * and bench harness run the default md5 so results stay
+  * oracle-comparable. The choice is read per expression build, so a
+  * test can exercise both backends in one JVM; it is process-global,
+  * not per-query.
   *
   * Both backends keep the same invariants the operators rely on:
   * [[hash60]] ∈ [0, 2^60) and [[hash32]] ∈ [0, 2^32) — positive,
@@ -31,9 +31,7 @@ object PortableHash {
   final val BackendProp = "graft.hash.backend"
 
   private def xxBackend: Boolean =
-    sys.props.get(BackendProp)
-      .orElse(sys.env.get("GRAFT_HASH_BACKEND"))
-      .contains("xxhash64")
+    sys.props.get(BackendProp).contains("xxhash64")
 
   /** 60-bit positive hash (md5: 15 hex chars — fits a signed 64-bit
     * long; xxhash64: top 60 bits of the unsigned value). */

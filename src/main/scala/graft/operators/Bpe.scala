@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import GraftCheckpoint.barrier
 
 /** Distributed byte-pair-encoding tokenizer construction — the
   * "BPE-ish" half of token counting a training-data pipeline needs:
@@ -52,9 +53,9 @@ object Bpe {
     * and encode starts from exactly this aggregate (the families
     * differ only in seeding, a projection of `word`), so a caller
     * composing SEVERAL families over one corpus — q167's fertility
-    * comparison — computes it once (localCheckpoint) and feeds the
-    * `FromCounts` entry points instead of paying one corpus scan +
-    * shuffle per family (guide §2.4: shared exchange). */
+    * comparison — computes it once (a [[GraftCheckpoint.barrier]])
+    * and feeds the `FromCounts` entry points instead of paying one
+    * corpus scan + shuffle per family (guide §2.4: shared exchange). */
   private[graft] def wordCounts(df: DataFrame, textCol: String): DataFrame =
     df.select(explode(split(col(textCol), " ")).as("word"))
       .filter(col("word") =!= "")
@@ -152,7 +153,7 @@ object Bpe {
                         minPairCount: Long): DataFrame = {
     require(merges >= 1, "at least one merge")
     val spark = words0.sparkSession
-    var words = words0.localCheckpoint(true)
+    var words = barrier(words0)
     // The chosen pair is MODEL-sized (1 row) — fetch it and fold the
     // rewrite in as literal expressions: the next round's aggregate
     // applies the pending replaces on the fly over the checkpointed
@@ -185,7 +186,7 @@ object Bpe {
           applyMerge(col("seq"), lit(p), lit(m)).as("seq"), col("wcount"))
         chained += 1
         if (chained >= TrainRechainEvery && i < merges) {
-          words = words.localCheckpoint(true) // bound the replace-chain depth
+          words = barrier(words) // bound the replace-chain depth
           chained = 0
         }
       }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import GraftCheckpoint.barrier
 import graft.functions.PortableHash
 
 /** Trained document-quality classification — the fastText-style linear
@@ -82,7 +83,7 @@ object Classifier {
       Seq("__id"))
     // The statics are checkpointed PRE-PARTITIONED on __id (the
     // [[Graph.pageRank]] statics discipline, via the AQE-scoped
-    // [[GraftCheckpoint.partitionedBarrier]] — a plain localCheckpoint
+    // [[GraftCheckpoint.partitionedBarrier]] — a plain barrier
     // records UnknownPartitioning under AQE): every per-iteration pass
     // over the corpus-sized feature matrix is keyed by __id — the
     // margin aggregate, the error join, the gradient's probe side —
@@ -128,11 +129,11 @@ object Classifier {
           (lit(1.0) / (lit(1.0) + exp(-col("__m"))) - col("__y")).as("__e"))
       val grad = feats.join(err.hint("shuffle_hash"), Seq("__id"))
         .groupBy(col("__b")).agg(sum(col("__e") * col("__x")).as("__g"))
-      w = w.join(grad, Seq("__b"), "left").crossJoin(nDocs)
+      // buckets+1 rows; truncates the lineage
+      w = barrier(w.join(grad, Seq("__b"), "left").crossJoin(nDocs)
         .select(col("__b"),
           round(col("__w") - lit(learnRate) *
-            coalesce(col("__g"), lit(0.0)) / col("__nd"), 9).as("__w"))
-        .localCheckpoint(true) // buckets+1 rows; truncates the lineage
+            coalesce(col("__g"), lit(0.0)) / col("__nd"), 9).as("__w")))
     }
     w
   }

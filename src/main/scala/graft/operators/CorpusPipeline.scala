@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import GraftCheckpoint.barrier
 
 /** End-to-end corpus cleaning — the composition a training-data
   * pipeline actually runs, as one operator: language gate + quality
@@ -162,8 +163,7 @@ object CorpusPipeline {
     // less, and re-verifying a pair that collides in two bands is
     // cheaper than deduping the full pair set first.
     val sigs0 = Dedup.minhashSignatures(exact, idCol, textCol, cfg.minhashK)
-    val sigs =
-      if (cfg.minAgree.isDefined) sigs0.localCheckpoint(true) else sigs0
+    val sigs = if (cfg.minAgree.isDefined) barrier(sigs0) else sigs0
     val dropped = cfg.minAgree match {
       case None =>
         Dedup.minhashCandidatePairs(
@@ -180,7 +180,11 @@ object CorpusPipeline {
         // output: the pair stream — quadratic in bucket density —
         // never re-crosses the wire into signature join-backs (the
         // old shape shuffled it twice)
-        val banded = Dedup.bandSignatures(
+        // materialized ONCE: both self-join sides consume it, and
+        // unmaterialized each would re-run the cap window's
+        // (band, sig) shuffle over the carry-widened rows — measured
+        // round 10: 28.1s vs 19.8s at 100× (SCALE.md)
+        val banded = barrier(Dedup.bandSignatures(
             sigs.select(col(idCol) +:
               ((0 until k).map(i => col(s"mh_$i")) ++
                (0 until k).map(i => col(s"mh_$i").as(s"c_mh_$i"))): _*),
@@ -190,12 +194,7 @@ object CorpusPipeline {
             org.apache.spark.sql.expressions.Window
               .partitionBy(col("band"), col("sig"))))
           .filter(col("__n") <= cfg.maxBucket)
-          .drop("__n")
-          // materialized ONCE: both self-join sides consume it, and
-          // unmaterialized each would re-run the cap window's
-          // (band, sig) shuffle over the carry-widened rows — measured
-          // round 10: 28.1s vs 19.8s at 100× (SCALE.md)
-          .localCheckpoint(true)
+          .drop("__n"))
         val a = banded.select(Seq(col(idCol).as("id_a"), col("band"),
           col("sig")) ++
           (0 until k).map(i => col(s"c_mh_$i").as(s"a_mh_$i")): _*)

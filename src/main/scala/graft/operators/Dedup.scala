@@ -264,24 +264,19 @@ object Dedup {
     * self-join needs, so the zero-drop common case pays no separate
     * census pass and no broadcast anti-join stage (the round-8 census
     * cost q33 ~1s at sf0.1 with zero buckets over cap). The banded
-    * frame is materialized ONCE with an eager localCheckpoint — it
-    * feeds both self-join sides, and without a materialization
-    * barrier AQE's broadcast planning duplicates the whole signature
-    * aggregation into each side (measured here: 2× the 16-min md5
-    * aggregate, 4.2s vs 0.3s at sf0.1). localCheckpoint, not cache:
-    * a cache entry would escape into the returned plan and pile up
-    * across bench passes (the round-8 caller-must-release wart);
-    * checkpoint blocks free with the RDD. Flood diagnostics live in
+    * frame is materialized ONCE, by [[capBuckets]] — it feeds both
+    * self-join sides, and without a materialization barrier AQE's
+    * broadcast planning duplicates the whole signature aggregation
+    * into each side (measured here: 2× the 16-min md5 aggregate,
+    * 4.2s vs 0.3s at sf0.1). A checkpoint barrier, not cache: a cache
+    * entry would escape into the returned plan and pile up across
+    * bench passes (the round-8 caller-must-release wart); checkpoint
+    * blocks free with the RDD. Flood diagnostics live in
     * [[minhashOverCapBuckets]]. */
   def minhashCandidatePairs(sigs: DataFrame, idCol: String, k: Int,
                             bands: Int, maxBucket: Int = 1000): DataFrame = {
-    val banded = bandSignatures(sigs, idCol, k, bands).localCheckpoint(true)
-    // the capped frame is materialized too: both self-join sides
-    // consume it, and unmaterialized each side would re-run the
-    // census + anti probe (measured: the duplicated census cost q33
-    // more than the window it replaced — SCALE_MEASURE_r16)
-    val kept = capBuckets(banded, Seq("band", "sig"), maxBucket)
-      .localCheckpoint(true)
+    val kept = capBuckets(bandSignatures(sigs, idCol, k, bands),
+      Seq("band", "sig"), maxBucket)
     val a = kept.select(col(idCol).as("id_a"), col("band"), col("sig"))
     val b = kept.select(col(idCol).as("id_b"), col("band"), col("sig"))
     a.join(b, Seq("band", "sig"))
@@ -311,16 +306,25 @@ object Dedup {
     * [[CapBroadcastMaxKeys]] keys the join falls back to a plain
     * shuffled left_anti (both sides hash-partition on the bucket key;
     * the probe side re-shuffles rows it would have streamed, the
-    * price of not dying). */
-  private[operators] def capBuckets(df: DataFrame, keys: Seq[String],
+    * price of not dying).
+    *
+    * The input and the result are [[GraftCheckpoint.barrier]]s too:
+    * the census and the anti probe both read the input, so
+    * unmaterialized its producer would run twice; every caller
+    * self-joins the result, so unmaterialized each join side would
+    * re-run the census and the probe (measured: the duplicated census
+    * cost q33 more than the window it replaced — SCALE_MEASURE_r16).
+    * Callers pass plain frames. */
+  private[operators] def capBuckets(in: DataFrame, keys: Seq[String],
                                     maxBucket: Int): DataFrame = {
-    val over = df.groupBy(keys.map(col): _*).agg(count(lit(1)).as("__n"))
+    val df = barrier(in)
+    val over = barrier(df.groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("__n"))
       .filter(col("__n") > maxBucket)
-      .select(keys.map(col): _*)
-      .localCheckpoint(true)
+      .select(keys.map(col): _*))
     val anti =
       if (over.count() <= CapBroadcastMaxKeys) broadcast(over) else over
-    df.join(anti, keys, "left_anti")
+    barrier(df.join(anti, keys, "left_anti"))
   }
 
   /** Over-cap key-list size above which [[capBuckets]] stops hinting a
@@ -415,16 +419,14 @@ object Dedup {
     * Plan shape (round 9, same as [[minhashCandidatePairs]]): the cap
     * is a window count filter riding the (chunk, v) exchange the
     * self-join needs anyway — no census job, no anti join in the
-    * zero-drop common case. The chunk rows are materialized once with
-    * an eager localCheckpoint (they feed both self-join sides; see
-    * the minhash twin for the measured duplication cost without the
-    * barrier and for why checkpoint beats cache here). */
+    * zero-drop common case. The chunk rows are materialized once, by
+    * [[capBuckets]] (they feed both self-join sides; see the minhash
+    * twin for the measured duplication cost without the barrier and
+    * for why checkpoint beats cache here). */
   def simhashPairs(sigs: DataFrame, idCol: String,
                    maxHamming: Int, maxBucket: Int = 1000): DataFrame = {
-    // capped frame materialized once for both self-join sides (the
-    // minhashCandidatePairs duplicated-census lesson)
-    val kept = capBuckets(simhashChunkRows(sigs, idCol).localCheckpoint(true),
-      Seq("chunk", "v"), maxBucket).localCheckpoint(true)
+    val kept = capBuckets(simhashChunkRows(sigs, idCol),
+      Seq("chunk", "v"), maxBucket)
     val a = kept.select(col(idCol).as("id_a"), col("simhash").as("sig_a"),
       col("chunk"), col("v"))
     val b = kept.select(col(idCol).as("id_b"), col("simhash").as("sig_b"),
@@ -487,7 +489,7 @@ object Dedup {
     // signature aggregation (the expensive corpus-wide explode+agg)
     // replans into every consumer; without, banding is the only
     // consumer and the banded cache below is enough
-    val sigsM = if (minAgree.isDefined) sigs.localCheckpoint(true) else sigs
+    val sigsM = if (minAgree.isDefined) barrier(sigs) else sigs
     // banded fan-out: with sigsM materialized, banding is a narrow
     // stack over checkpoint blocks — cheaper to recompute per consumer
     // than to pay a cache-fill job; without (unverified path), the
@@ -498,10 +500,9 @@ object Dedup {
         banded.count() // populate before TWO consumers scan it in one job
         val centers = banded.groupBy(col("band"), col("sig"))
           .agg(min(col(idCol)).as("center"))
-        try banded.join(centers, Seq("band", "sig"))
+        try barrier(banded.join(centers, Seq("band", "sig"))
           .filter(col(idCol) =!= col("center")) // size-1 buckets drop out
-          .select(col(idCol).as("id_a"), col("center").as("id_b"))
-          .localCheckpoint(true)
+          .select(col(idCol).as("id_a"), col("center").as("id_b")))
         finally banded.unpersist()
       case Some(th) =>
         // verified path, round-10 shape (the q95 carry medicine): the
@@ -512,14 +513,13 @@ object Dedup {
         // stream never re-crosses the wire into signature join-backs
         // (the old shape shuffled it twice; q67 at 100× measured the
         // cost). Band rows carry k extra ints — corpus-linear.
-        val banded = bandSignatures(
+        // both consumers (center aggregate + star join) would
+        // otherwise re-derive the carry-widened band table from the
+        // signature checkpoint
+        val banded = barrier(bandSignatures(
           sigsM.select(col(idCol) +: ((0 until k).map(i => col(s"mh_$i")) ++
             (0 until k).map(i => col(s"mh_$i").as(s"a_mh_$i"))): _*),
-          idCol, k, bands, carry = (0 until k).map(i => s"a_mh_$i"))
-          // both consumers (center aggregate + star join) would
-          // otherwise re-derive the carry-widened band table from the
-          // signature checkpoint
-          .localCheckpoint(true)
+          idCol, k, bands, carry = (0 until k).map(i => s"a_mh_$i")))
         val centers = banded.groupBy(col("band"), col("sig"))
           .agg(min(struct(col(idCol) +:
             (0 until k).map(i => col(s"a_mh_$i").as(s"b_mh_$i")): _*))
@@ -704,10 +704,10 @@ object Dedup {
     * components table keyed by (corpus snapshot, minhash params) and
     * every downstream job scans that table. This is the in-session
     * analog: the first consumer runs [[minhashComponents]] and
-    * materializes the labels with an eager localCheckpoint (plan
-    * truncated to a block scan; two longs per clustered doc — orders
-    * of magnitude smaller than the corpus), and later consumers with
-    * the same key scan the existing blocks. Memo lifecycle (not
+    * materializes the labels with an eager [[GraftCheckpoint.barrier]]
+    * (plan truncated to a block scan; two longs per clustered doc —
+    * orders of magnitude smaller than the corpus), and later consumers
+    * with the same key scan the existing blocks. Memo lifecycle (not
     * dropped by `clearCache()`): [[graft.core.Memo]]; call
     * [[releaseComponents]] to reset. */
   def componentsOf(docs: DataFrame, corpusKey: String, idCol: String,
@@ -715,8 +715,8 @@ object Dedup {
                    minAgree: Option[Int] = None): DataFrame =
     componentsMemo(
         componentsKey(docs, corpusKey, idCol, textCol, k, bands, minAgree)) {
-      minhashComponents(minhashSignatures(docs, idCol, textCol, k),
-        idCol, k, bands, minAgree = minAgree).localCheckpoint(true)
+      barrier(minhashComponents(minhashSignatures(docs, idCol, textCol, k),
+        idCol, k, bands, minAgree = minAgree))
     }
 
   /** Producer path: ALWAYS recompute this corpus's components and
@@ -956,10 +956,10 @@ object Dedup {
     * spec's honest cost, not a plan artifact.
     *
     * Materialization: `shingles` is referenced three times (df
-    * filter, both join sides) and `filtered` twice — eager
-    * `localCheckpoint` truncates each to a block scan (a `.cache()`
-    * alone left the explode subtree re-planned at every reference:
-    * 142 codegen stages at sf0.1, the round-5 finding). */
+    * filter, both join sides) and `filtered` twice — an eager
+    * [[GraftCheckpoint.barrier]] truncates each to a block scan (a
+    * `.cache()` alone left the explode subtree re-planned at every
+    * reference: 142 codegen stages at sf0.1, the round-5 finding). */
   def ngramJaccard(df: DataFrame, idCol: String, textCol: String,
                    n: Int, maxDocFreq: Int, minJaccard: Double): DataFrame = {
     val shingles = barrier(df

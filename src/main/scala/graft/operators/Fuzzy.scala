@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import GraftCheckpoint.barrier
 
 /** Approximate-string (edit-distance) joins, scale-first.
   *
@@ -52,8 +53,8 @@ object Fuzzy {
     // materialized once: the bucket-cap census below is an eager action,
     // and without truncation the join would re-run the whole explode a
     // second time — at scale that doubles the dominant cost
-    val rVar = explodedVariants(right, rightId, rightStr, maxDist, "r_id")
-      .localCheckpoint(true)
+    val rVar = barrier(
+      explodedVariants(right, rightId, rightStr, maxDist, "r_id"))
     // quadratic-blowup guard on the variant key (same contract as
     // Dedup.simhashPairs): a flood of identical/near-identical strings
     // concentrates in one variant bucket; over-cap buckets are dropped

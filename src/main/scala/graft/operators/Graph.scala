@@ -28,14 +28,14 @@ object Graph {
     * aggregate and one join back to the node list — both keyed on the
     * node id, no all-pairs anything. The deduped edge list, out-degree
     * table, and node list are computed once and reused every round
-    * (eager localCheckpoint: recomputing them per round would rescan
+    * (an eager barrier: recomputing them per round would rescan
     * the source `iters` times, and the truncated lineage keeps the
     * final plan from growing with the round count — same discipline as
     * [[Dedup.connectedComponents]]).
     *
     * The statics are checkpointed PRE-PARTITIONED on their join keys
-    * (edge list on src, node list on node — localCheckpoint preserves
-    * the partitioning in the LogicalRDD), so each round's joins
+    * (edge list on src, node list on node — partitionedBarrier
+    * declares the partitioning on the LogicalRDD), so each round's joins
     * exchange only the rank/contribution side; the edge list — the
     * largest frame in the loop — never crosses the wire again after
     * round 0 (round 9, measured: 3.5 → ~2.5s at sf0.1, the removed
@@ -47,7 +47,7 @@ object Graph {
       .select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
       .distinct())
-    // partitionedBarrier (round 17): Dataset.localCheckpoint under AQE
+    // partitionedBarrier (round 17): a Dataset checkpoint under AQE
     // records UnknownPartitioning, so the plain repartition+barrier
     // form silently re-exchanged BOTH statics every round on Spark 4 —
     // the AQE-scoped barrier restores the recorded HashPartitioning
@@ -137,7 +137,7 @@ object Graph {
       .filter(col("src").isNotNull && col("dst").isNotNull)
       .distinct())
     // partitionedBarrier (round 17): see [[pageRank]] — the plain
-    // repartition+localCheckpoint form lost its recorded partitioning
+    // repartition+barrier form lost its recorded partitioning
     // under AQE and re-exchanged both edge copies every round
     val nodes = partitionedBarrier(
       e0.select(col("src").as("node"))

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import GraftCheckpoint.barrier
 
 /** Reusable relational operator patterns from the reference's inventory
   * (SURVEY.md §2.3/§2.5), expressed Spark-first.
@@ -567,10 +568,10 @@ object Relational {
                       outCol: String = "rn"): DataFrame = {
     val spark = df.sparkSession
     val keys = orderCols.map(col)
-    val sorted = df.repartitionByRange(keys: _*)
+    // two consumers: counts + the rank pass
+    val sorted = barrier(df.repartitionByRange(keys: _*)
       .sortWithinPartitions(keys: _*)
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint(true) // two consumers: counts + the rank pass
+      .withColumn("__pid", spark_partition_id()))
     val counts = sorted.groupBy(col("__pid")).count()
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     val nPart = if (counts.isEmpty) 0 else counts.keys.max + 1

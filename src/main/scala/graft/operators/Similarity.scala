@@ -307,17 +307,17 @@ object Similarity {
                       iters: Int): (DataFrame, DataFrame) = {
     require(m >= 1 && dim % m == 0, s"m=$m must divide dim=$dim")
     require(ksub >= 2 && iters >= 1, "ksub >= 2, iters >= 1")
-    val sub = pqSubVectors(df, idCol, vecCol, dim, m).localCheckpoint(true)
+    val sub = barrier(pqSubVectors(df, idCol, vecCol, dim, m))
     var assigned = sub
       .withColumn("code", pmod(col("pid"), lit(ksub)).cast("int"))
       .withColumn("d2", lit(0.0))
     var codebook: DataFrame = null
     for (i <- 1 to iters) {
-      val cents = assigned.groupBy(col("s"), col("code"))
+      // m×ksub rows; reused by assignment + caller
+      val cents = barrier(assigned.groupBy(col("s"), col("code"))
         .agg(graft.functions.Centroid(col("sv").cast("array<float>")).as("raw"))
         .select(col("s").as("c_s"), col("code").as("c_code"),
-          transform(col("raw"), v => round(v, 6)).as("centroid"))
-        .localCheckpoint(true) // m×ksub rows; reused by assignment + caller
+          transform(col("raw"), v => round(v, 6)).as("centroid")))
       val w = Window.partitionBy(col("pid"), col("s"))
         .orderBy(col("d2").asc, col("c_code").asc)
       assigned = assigned.drop("code", "d2")
@@ -326,7 +326,7 @@ object Similarity {
         .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
         .select(col("pid"), col("s"), col("sv"), col("c_code").as("code"),
           col("d2"))
-      if (i < iters) assigned = assigned.localCheckpoint(true)
+      if (i < iters) assigned = barrier(assigned)
       codebook = cents
     }
     (assigned, codebook)
@@ -356,8 +356,8 @@ object Similarity {
            dim: Int, m: Int, ksub: Int, iters: Int): (DataFrame, DataFrame) =
     pqMemo(s"${df.sparkSession.sparkContext.applicationId}|$corpusKey|$idCol|$vecCol|$dim|$m|$ksub|$iters") {
       val (assigned, codebook) = pqTrain(df, idCol, vecCol, dim, m, ksub, iters)
-      (assigned.select(col("pid"), col("s"), col("code"), col("d2"))
-        .localCheckpoint(true), codebook)
+      (barrier(assigned.select(col("pid"), col("s"), col("code"), col("d2"))),
+        codebook)
     }
 
   /** Drop every memoized PQ artifact. */
@@ -556,19 +556,20 @@ object Similarity {
   }
 
   /** Session-scoped memo ([[graft.core.Memo]]) of trained cell
-    * tables (an eager localCheckpoint, two ints per vector), keyed by
-    * (context, corpus key, cols, k, iters) — the in-session analog of
-    * the production shape where the coarse quantizer is trained ONCE
-    * per corpus snapshot and every query batch probes the same cell
-    * table. Also holds [[refinedCellsOf]]'s artifacts, whose
-    * evaluation looks up the coarse cells in this same memo.
+    * tables (an eager [[GraftCheckpoint.barrier]], two ints per
+    * vector), keyed by (context, corpus key, cols, k, iters) — the
+    * in-session analog of the production shape where the coarse
+    * quantizer is trained ONCE per corpus snapshot and every query
+    * batch probes the same cell table. Also holds [[refinedCellsOf]]'s
+    * artifacts, whose evaluation looks up the coarse cells in this
+    * same memo.
     * [[releaseCells]] resets. */
   private val cellsMemo = new graft.core.Memo[String, DataFrame]
 
   def cellsOf(df: DataFrame, corpusKey: String, idCol: String,
               vecCol: String, k: Int, iters: Int): DataFrame =
     cellsMemo(s"${df.sparkSession.sparkContext.applicationId}|$corpusKey|$idCol|$vecCol|$k|$iters") {
-      kmeansCells(df, idCol, vecCol, k, iters).localCheckpoint(true)
+      barrier(kmeansCells(df, idCol, vecCol, k, iters))
     }
 
   /** Drop every memoized cell table. */
@@ -588,11 +589,10 @@ object Similarity {
                      vecCol: String, k: Int, iters: Int, dim: Int,
                      targetCell: Int = 63): DataFrame =
     cellsMemo(s"${df.sparkSession.sparkContext.applicationId}|$corpusKey|$idCol|$vecCol|$k|$iters|refined|$dim|$targetCell") {
-      subdivideCells(
+      barrier(subdivideCells(
           df.join(cellsOf(df, corpusKey, idCol, vecCol, k, iters), Seq(idCol)),
           vecCol, "cell", dim, k, targetCell)
-        .select(col(idCol), col("cell"))
-        .localCheckpoint(true)
+        .select(col(idCol), col("cell")))
     }
 
   /** Cross-SESSION form of [[cellsOf]]: load the published
@@ -757,15 +757,10 @@ object Similarity {
           (id, t, bucket)
         }
       }).toDF("__ids", "t", "bucket")
-    // the bucket frame is materialized BEFORE capBuckets — its census
-    // and its anti probe both consume wb, and unmaterialized the
-    // typed kernel above runs twice (the duplicated-census cost the
-    // Dedup.minhashCandidatePairs call sites checkpoint `banded` to
-    // avoid); the capped frame is then materialized too, for the two
-    // self-join sides below
-    val kept = graft.operators.Dedup.capBuckets(
-        wb.localCheckpoint(true), Seq("t", "bucket"),
-      maxBucket).localCheckpoint(true)
+    // capBuckets materializes wb (so the typed kernel above runs once)
+    // and its capped result (read by both self-join sides below)
+    val kept = graft.operators.Dedup.capBuckets(wb, Seq("t", "bucket"),
+      maxBucket)
     val a = kept.select(col("t"), col("bucket"), col("__ids").as("id_a"))
     val bb = kept.select(col("t"), col("bucket"), col("__ids").as("id_b"))
     val cands = a.join(bb, Seq("t", "bucket"))

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import GraftCheckpoint.barrier
 
 /** Unigram-LM (SentencePiece-style) tokenizer trainer — the second
   * production tokenizer family next to [[Bpe]] (Kudo, "Subword
@@ -156,8 +157,8 @@ object UnigramLm {
     require(maxPieceLen >= 2 && seedTop >= 1 && keepMulti >= 0 && iters >= 1)
     val spark = wc.sparkSession
     import spark.implicits._
-    val words = wc.select(col("word"), col("wcount"))
-      .as[(String, Long)].localCheckpoint(true) // vocab-sized, reused every iteration
+    // vocab-sized, reused every iteration
+    val words = barrier(wc.select(col("word"), col("wcount")).as[(String, Long)])
     // the alphabet: tiny by construction, the one driver-side constant
     val singles: Array[String] = words
       .flatMap(_._1.map(_.toString)).distinct().collect().sorted

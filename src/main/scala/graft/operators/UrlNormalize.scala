@@ -310,8 +310,9 @@ object UrlNormalize {
     * rules: array<struct<allow, rule_path, specificity, rule_regex>>
     * (sorted, possibly empty), crawl_delay: double (NULL when
     * unpublished)). The frame is domain-sized (tiny next to any URL
-    * corpus) — checkpoint or broadcast it once and feed every
-    * consumer, e.g. [[robotsGateFromPolicy]]. */
+    * corpus) — materialize it once with [[GraftCheckpoint.barrier]]
+    * (or broadcast it) and feed every consumer, e.g.
+    * [[robotsGateFromPolicy]]. */
   def robotsPolicy(robots: DataFrame, domainCol: String,
                    robotsCol: String, agent: String): DataFrame =
     policyCore(robots, domainCol, robotsCol, agent)

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import GraftCheckpoint.barrier
 
 /** Distributed WordPiece tokenizer — the third production tokenizer
   * family next to [[Bpe]] and [[UnigramLm]] (Schuster & Nakajima,
@@ -64,7 +65,7 @@ object WordPiece {
                           minPairCount: Long): DataFrame = {
     require(merges >= 1, "at least one merge")
     val spark = words0.sparkSession
-    var words = words0.localCheckpoint(true)
+    var words = barrier(words0)
     // [[Bpe.train]]'s round-17 loop shape: the 1-row pick is fetched
     // (the merge table is a driver-held MODEL) and the rewrite chains
     // as literal expressions over the checkpointed vocabulary instead
@@ -101,7 +102,7 @@ object WordPiece {
           col("wcount"))
         chained += 1
         if (chained >= Bpe.TrainRechainEvery && i < merges) {
-          words = words.localCheckpoint(true) // bound the replace-chain depth
+          words = barrier(words) // bound the replace-chain depth
           chained = 0
         }
       }

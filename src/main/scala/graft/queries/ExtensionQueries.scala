@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
+import graft.operators.GraftCheckpoint.barrier
 import graft.sources.Multimodal
 import graft.streaming.EventStream
 
@@ -195,17 +196,15 @@ object ExtensionQueries {
     // machinery unchanged, so the q149 oracle carries over verbatim
     "q173_crawl_gate_gz" -> ((s, dir) => {
       val d = Tables.load(s, dir, "documents")
-      val recs = graft.sources.Warc.gzRecords(
+      val recs = barrier(graft.sources.Warc.gzRecords(
           graft.sources.Warc.synthesizeWarcGz(
             d.select(col("doc_id"), crawlPageHtml.as("text"))))
         .filter(col("rec_type") === "response")
         .select(col("file_id"), col("target_uri").as("url"),
-          col("payload"))
-        .localCheckpoint()
+          col("payload")))
       val urls = recs.select("file_id", "url")
-      val policy = graft.operators.UrlNormalize
-        .robotsPolicy(crawlRobots(d), "domain", "robots_txt", "graftbot")
-        .localCheckpoint()
+      val policy = barrier(graft.operators.UrlNormalize
+        .robotsPolicy(crawlRobots(d), "domain", "robots_txt", "graftbot"))
       val robotsOk = graft.operators.UrlNormalize
         .robotsGateFromPolicy(urls, "file_id", "url", policy)
         .filter(col("allowed")).select("file_id")
@@ -290,9 +289,8 @@ object ExtensionQueries {
     // stubs die BEFORE any broadcast join runs.
     "q198_http_gate" -> ((s, dir) => {
       val d = Tables.load(s, dir, "documents")
-      val policy = graft.operators.UrlNormalize
-        .robotsPolicy(crawlRobots(d), "domain", "robots_txt", "graftbot")
-        .localCheckpoint()
+      val policy = barrier(graft.operators.UrlNormalize
+        .robotsPolicy(crawlRobots(d), "domain", "robots_txt", "graftbot"))
       graft.streaming.CrawlStream.gatedRecords(
         graft.sources.Warc.synthesizeWarcGzHttpSegment(
           d.select(col("doc_id"), crawlPageHtml.as("text")),
@@ -390,17 +388,16 @@ object ExtensionQueries {
     // the crawl already has: every planted 301 targets the successor
     // page, which is itself fetched unless it sits in the text/plain
     // band — the only survivors), and politeness-scheduled per site
-    // host. One record walk feeds both branches (localCheckpoint —
-    // the q149 barrier discipline).
+    // host. One record walk feeds both branches (a barrier — the
+    // q149 discipline).
     "q202_redirect_frontier" -> ((s, dir) => {
-      val recs = graft.sources.Warc.httpResponses(
+      val recs = barrier(graft.sources.Warc.httpResponses(
           graft.sources.Warc.gzRecords(
             graft.sources.Warc.synthesizeWarcGzHttpSegment(
               Tables.load(s, dir, "documents"), recordsPerFile = 100)))
         .filter(col("rec_type") === "response")
         .select(col("target_uri"), col("http_status"), col("mime"),
-          col("http_location"))
-        .localCheckpoint()
+          col("http_location")))
       val seen = recs
         .filter(col("http_status") === 200 && col("mime") === "text/html")
         .select(md5(col("target_uri")).as("url_digest"))
@@ -569,20 +566,18 @@ object ExtensionQueries {
       // slowest cell). On a real crawl the walk is a disk read and
       // the checkpoint is the block cache; here it also pays the
       // fixture synthesis exactly once.
-      val recs = graft.sources.Warc.records(
+      val recs = barrier(graft.sources.Warc.records(
           graft.sources.Warc.synthesizeWarc(
             d.select(col("doc_id"), crawlPageHtml.as("text"))))
         .filter(col("rec_type") === "response")
         .select(col("file_id"), col("target_uri").as("url"),
-          col("payload"))
-        .localCheckpoint()
+          col("payload")))
       // both gates consume only (id, url) off the checkpointed frame
       val urls = recs.select("file_id", "url")
       // ONE robots parse: the checkpointed per-domain policy frame
       // feeds both the verdict gate and the scheduler-delay join
-      val policy = graft.operators.UrlNormalize
-        .robotsPolicy(crawlRobots(d), "domain", "robots_txt", "graftbot")
-        .localCheckpoint()
+      val policy = barrier(graft.operators.UrlNormalize
+        .robotsPolicy(crawlRobots(d), "domain", "robots_txt", "graftbot"))
       val robotsOk = graft.operators.UrlNormalize
         .robotsGateFromPolicy(urls, "file_id", "url", policy)
         .filter(col("allowed")).select("file_id")
@@ -623,9 +618,8 @@ object ExtensionQueries {
         graft.sources.Warc.synthesizeWarc(
             d.select(col("doc_id"), crawlPageHtml.as("text")))
           .repartition(8).write.parquet(p))
-      val policy = graft.operators.UrlNormalize
-        .robotsPolicy(crawlRobots(d), "domain", "robots_txt", "graftbot")
-        .localCheckpoint()
+      val policy = barrier(graft.operators.UrlNormalize
+        .robotsPolicy(crawlRobots(d), "domain", "robots_txt", "graftbot"))
       graft.streaming.CrawlStream.drainGated(s, warcDir, policy,
         crawlBlocklist(s))
     }),
@@ -646,9 +640,8 @@ object ExtensionQueries {
         graft.sources.Warc.synthesizeWarcGz(
             d.select(col("doc_id"), crawlPageHtml.as("text")))
           .repartition(8).write.parquet(p))
-      val policy = graft.operators.UrlNormalize
-        .robotsPolicy(crawlRobots(d), "domain", "robots_txt", "graftbot")
-        .localCheckpoint()
+      val policy = barrier(graft.operators.UrlNormalize
+        .robotsPolicy(crawlRobots(d), "domain", "robots_txt", "graftbot"))
       graft.streaming.CrawlStream.drainGated(s, warcDir, policy,
         crawlBlocklist(s), queryName = "graft_stream_crawl_gz", gz = true)
     }),
@@ -897,9 +890,8 @@ object ExtensionQueries {
           when(col("id") % 2 === 0, concat(lit("Crawl-delay: "),
             (col("id") + 1).cast("string"), lit("\n")))
             .otherwise(lit(""))).as("robots_txt"))
-      val policy = graft.operators.UrlNormalize
-        .robotsPolicy(newsRobots, "domain", "robots_txt", "graftbot")
-        .localCheckpoint()
+      val policy = barrier(graft.operators.UrlNormalize
+        .robotsPolicy(newsRobots, "domain", "robots_txt", "graftbot"))
       graft.streaming.CrawlStream.expandFrontier(
         d.select(cycleSrcUrl.as("url"), cyclePageHtml.as("html")),
         "url", "html", seen,
@@ -958,13 +950,13 @@ object ExtensionQueries {
           Scratch.artifactRoot, "frontier_seen", key, "v0001")
       val seen = ArtifactStore.loadUpTo(s, Scratch.artifactRoot,
         "frontier_seen", key, "v0001").get
-      val links = graft.operators.Html.extractLinks(
+      // feeds pageRank AND the target list
+      val links = barrier(graft.operators.Html.extractLinks(
           d.select(cycleSrcUrl.as("url"), cyclePageHtml.as("html")),
           "url", "html")
         .select(col("url").as("src"),
           graft.operators.UrlNormalize.canonicalize(col("href")).as("dst"))
-        .filter(col("dst").rlike("^https?://"))
-        .localCheckpoint() // feeds pageRank AND the target list
+        .filter(col("dst").rlike("^https?://")))
       val ranks = graft.operators.Graph.pageRank(links, "src", "dst",
         PipelineQueries.PageRankIters, PipelineQueries.PageRankDamping)
       val fresh = links.select(col("dst").as("url")).distinct()

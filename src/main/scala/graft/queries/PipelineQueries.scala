@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
+import graft.operators.GraftCheckpoint.barrier
 import graft.operators.{CorpusPipeline, Dedup, Sampling, Similarity, TextAnalysis, UrlNormalize}
 import graft.functions.PortableHash
 
@@ -226,6 +227,47 @@ object PipelineQueries {
     Tables.load(s, dir, "documents")
   private def embs(s: SparkSession, dir: String): DataFrame =
     Tables.load(s, dir, "embeddings")
+
+  /** The frontier queries' 7-domain robots corpus (q169, q171, q178):
+    * `site<h>.example` for h = doc_id % 7; /private disallowed
+    * everywhere, site3 disallows /page too, even-numbered sites
+    * publish Crawl-delay h+1. */
+  private def frontierRobots(d: DataFrame): DataFrame =
+    d.select(pmod(col("doc_id"), lit(7)).as("h")).distinct().select(
+      concat(lit("site"), col("h").cast("string"), lit(".example"))
+        .as("domain"),
+      concat(lit("User-agent: *\nDisallow: /private\n"),
+        when(col("h") === 3, lit("Disallow: /page\n"))
+          .otherwise(lit("")),
+        when(col("h") % 2 === 0,
+          concat(lit("Crawl-delay: "), (col("h") + 1).cast("string"),
+            lit("\n"))).otherwise(lit(""))).as("robots_txt"))
+
+  /** The two-part sitemap arrivals of q171 and q178: one urlset per
+    * (domain, part = doc_id % 2) as `(bseq, domain, xml)`, with
+    * /private paths at doc_id % 3 == 1 (independent of the part, so
+    * every host has survivors in both parts). */
+  private def frontierParts(d: DataFrame): DataFrame = {
+    val dn = pmod(col("doc_id"), lit(7))
+    val ids = col("doc_id").cast("string")
+    val path = when(pmod(col("doc_id"), lit(3)) === 1,
+        concat(lit("/private/x"), ids))
+      .otherwise(concat(lit("/page/"), ids, lit("?a=1&amp;b="),
+        pmod(col("doc_id"), lit(5)).cast("string")))
+    val entry = concat(lit("  <url><loc>https://site"),
+      dn.cast("string"), lit(".example"), path, lit("</loc></url>"))
+    d.select(
+        concat(lit("site"), dn.cast("string"), lit(".example"))
+          .as("domain"),
+        pmod(col("doc_id"), lit(2)).as("part"),
+        struct(col("doc_id"), entry.as("e")).as("se"))
+      .groupBy(col("domain"), col("part"))
+      .agg(concat(lit("<urlset>\n"),
+        array_join(transform(sort_array(collect_list(col("se"))),
+          x => x.getField("e")), "\n"),
+        lit("\n</urlset>")).as("xml"))
+      .select(col("part").as("bseq"), col("domain"), col("xml"))
+  }
 
   val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -832,8 +874,8 @@ object PipelineQueries {
           lit(".example/sitemap_index.xml\n")).as("robots_txt"))
       // ONE robots parse: verdict rules + delays; the bootstrap reads
       // the same corpus with the line-level parser
-      val policy = UrlNormalize.robotsPolicy(robots, "domain",
-        "robots_txt", "graftbot").localCheckpoint()
+      val policy = barrier(UrlNormalize.robotsPolicy(robots, "domain",
+        "robots_txt", "graftbot"))
       val boot = UrlNormalize.robotsSitemaps(robots, "domain", "robots_txt")
       // published index bodies, keyed by the bootstrap's URL: two
       // child sitemaps per domain (the 50k-entry split convention)
@@ -915,17 +957,8 @@ object PipelineQueries {
             x => x.getField("e")), "\n"),
           lit("\n</urlset>")).as("xml"))
       val sm = UrlNormalize.sitemapUrls(sitemaps, "domain", "xml")
-      val robots = d.select(dn.as("h")).distinct().select(
-        concat(lit("site"), col("h").cast("string"), lit(".example"))
-          .as("domain"),
-        concat(lit("User-agent: *\nDisallow: /private\n"),
-          when(col("h") === 3, lit("Disallow: /page\n"))
-            .otherwise(lit("")),
-          when(col("h") % 2 === 0,
-            concat(lit("Crawl-delay: "), (col("h") + 1).cast("string"),
-              lit("\n"))).otherwise(lit(""))).as("robots_txt"))
-      val policy = UrlNormalize.robotsPolicy(robots, "domain",
-        "robots_txt", "graftbot").localCheckpoint()
+      val policy = barrier(UrlNormalize.robotsPolicy(frontierRobots(d),
+        "domain", "robots_txt", "graftbot"))
       val (allowed, _) = UrlNormalize.robotsVerdictCols(
         UrlNormalize.pathOf(col("url")), col("rules"))
       val gated = sm
@@ -952,40 +985,12 @@ object PipelineQueries {
     // the q169 window with the part key prepended
     "q171_stream_frontier" -> ((s, dir) => {
       val d = docs(s, dir)
-      val dn = pmod(col("doc_id"), lit(7))
-      val ids = col("doc_id").cast("string")
-      val path = when(pmod(col("doc_id"), lit(3)) === 1,
-          concat(lit("/private/x"), ids))
-        .otherwise(concat(lit("/page/"), ids, lit("?a=1&amp;b="),
-          pmod(col("doc_id"), lit(5)).cast("string")))
-      val entry = concat(lit("  <url><loc>https://site"),
-        dn.cast("string"), lit(".example"), path, lit("</loc></url>"))
-      val parts = d.select(
-          concat(lit("site"), dn.cast("string"), lit(".example"))
-            .as("domain"),
-          pmod(col("doc_id"), lit(2)).as("part"),
-          struct(col("doc_id"), entry.as("e")).as("se"))
-        .groupBy(col("domain"), col("part"))
-        .agg(concat(lit("<urlset>\n"),
-          array_join(transform(sort_array(collect_list(col("se"))),
-            x => x.getField("e")), "\n"),
-          lit("\n</urlset>")).as("xml"))
-        .select(col("part").as("bseq"), col("domain"), col("xml"))
       val arrivalDir = fixtureDir("graft_stream_front", dir)
       Scratch.memo(arrivalDir)(p =>
-        graft.streaming.CrawlStream.writeArrivalBatches(parts, "bseq",
-          p))
-      val robots = d.select(dn.as("h")).distinct().select(
-        concat(lit("site"), col("h").cast("string"), lit(".example"))
-          .as("domain"),
-        concat(lit("User-agent: *\nDisallow: /private\n"),
-          when(col("h") === 3, lit("Disallow: /page\n"))
-            .otherwise(lit("")),
-          when(col("h") % 2 === 0,
-            concat(lit("Crawl-delay: "), (col("h") + 1).cast("string"),
-              lit("\n"))).otherwise(lit(""))).as("robots_txt"))
-      val policy = UrlNormalize.robotsPolicy(robots, "domain",
-        "robots_txt", "graftbot").localCheckpoint()
+        graft.streaming.CrawlStream.writeArrivalBatches(frontierParts(d),
+          "bseq", p))
+      val policy = barrier(UrlNormalize.robotsPolicy(frontierRobots(d),
+        "domain", "robots_txt", "graftbot"))
       graft.streaming.CrawlStream.drainFrontier(s, arrivalDir, policy)
     }),
 
@@ -1002,38 +1007,12 @@ object PipelineQueries {
       val d = docs(s, dir)
       val dn = pmod(col("doc_id"), lit(7))
       val ids = col("doc_id").cast("string")
-      val path = when(pmod(col("doc_id"), lit(3)) === 1,
-          concat(lit("/private/x"), ids))
-        .otherwise(concat(lit("/page/"), ids, lit("?a=1&amp;b="),
-          pmod(col("doc_id"), lit(5)).cast("string")))
-      val entry = concat(lit("  <url><loc>https://site"),
-        dn.cast("string"), lit(".example"), path, lit("</loc></url>"))
-      val parts = d.select(
-          concat(lit("site"), dn.cast("string"), lit(".example"))
-            .as("domain"),
-          pmod(col("doc_id"), lit(2)).as("part"),
-          struct(col("doc_id"), entry.as("e")).as("se"))
-        .groupBy(col("domain"), col("part"))
-        .agg(concat(lit("<urlset>\n"),
-          array_join(transform(sort_array(collect_list(col("se"))),
-            x => x.getField("e")), "\n"),
-          lit("\n</urlset>")).as("xml"))
-        .select(col("part").as("bseq"), col("domain"), col("xml"))
       val arrivalDir = fixtureDir("graft_stream_recrawl", dir)
       Scratch.memo(arrivalDir)(p =>
-        graft.streaming.CrawlStream.writeArrivalBatches(parts, "bseq",
-          p))
-      val robots = d.select(dn.as("h")).distinct().select(
-        concat(lit("site"), col("h").cast("string"), lit(".example"))
-          .as("domain"),
-        concat(lit("User-agent: *\nDisallow: /private\n"),
-          when(col("h") === 3, lit("Disallow: /page\n"))
-            .otherwise(lit("")),
-          when(col("h") % 2 === 0,
-            concat(lit("Crawl-delay: "), (col("h") + 1).cast("string"),
-              lit("\n"))).otherwise(lit(""))).as("robots_txt"))
-      val policy = UrlNormalize.robotsPolicy(robots, "domain",
-        "robots_txt", "graftbot").localCheckpoint()
+        graft.streaming.CrawlStream.writeArrivalBatches(frontierParts(d),
+          "bseq", p))
+      val policy = barrier(UrlNormalize.robotsPolicy(frontierRobots(d),
+        "domain", "robots_txt", "graftbot"))
       // the seen plant: already-fetched survivors, digests only —
       // published once (exists-guard) so repeated runs stay stable
       if (!ArtifactStore.exists(s, Scratch.artifactRoot, "frontier_seen",
@@ -1810,18 +1789,18 @@ object PipelineQueries {
       // sum-over-multiplicities; trains are projections of the shared
       // counts). The encode word totals derive from the doc frame
       // (vocab-sized aggregate), not a third corpus pass.
-      val wc = Bpe.wordCounts(d, "text").localCheckpoint(true)
+      val wc = barrier(Bpe.wordCounts(d, "text"))
       // the shared encode frame is WORD-keyed everywhere it is read —
       // the four per-family encode joins and the word-totals aggregate
       // below — so it checkpoints through the size-gated
       // partitionedBarrier on `word` (round 18, guide §2.4): at real
       // scale the four joins and the aggregate reuse one recorded
       // layout instead of re-exchanging dw per family; below the pin
-      // gate (sf0.1) this is exactly the former localCheckpoint
+      // gate (sf0.1) this is exactly a plain barrier
       val dw = graft.operators.GraftCheckpoint.partitionedBarrier(
         Bpe.docWordCounts(enc, "doc_id", "text"), Seq("word"))
-      val wcE = dw.groupBy(col("word")).agg(sum(col("__c")).as("wcount"))
-        .localCheckpoint(true)
+      val wcE = barrier(
+        dw.groupBy(col("word")).agg(sum(col("__c")).as("wcount")))
       // The four trainings are INDEPENDENT chains of small driver-
       // round-trip jobs (8 merge rounds / 2 EM sweeps each) over the
       // shared checkpointed counts — run them from a driver thread

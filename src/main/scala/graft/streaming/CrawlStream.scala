@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Html, UrlNormalize}
+import graft.operators.GraftCheckpoint.barrier
 import graft.sources.Warc
 
 /** Streaming crawl ingest — the q149 batch gate composed over a FILE
@@ -115,7 +116,7 @@ object CrawlStream {
     // planner reuses ONE BroadcastExchange across the levels
     // (ReusedExchange) — 1 broadcast build per trigger instead of 6
     // (guide §2.4: shared exchange).
-    val bl = blocklist.select(col("domain")).distinct().localCheckpoint()
+    val bl = barrier(blocklist.select(col("domain")).distinct())
     val withSufs = afterRobots
       .withColumn("__sufs", UrlNormalize.hostSuffixes(col("__dom")))
     // try_element_at: suffix levels beyond the host's label count
@@ -657,8 +658,8 @@ object CrawlStream {
       s"crawl-loop state must publish a version sorting after the loaded " +
         s"one (got load=$loadVersion publish=$publishVersion)")
     // ONE robots parse for the whole loop: verdict gate + delay table
-    val policy = UrlNormalize
-      .robotsPolicy(robots, "domain", "robots_txt", agent).localCheckpoint()
+    val policy = barrier(UrlNormalize
+      .robotsPolicy(robots, "domain", "robots_txt", agent))
     val seen = ArtifactStore
       .loadUpTo(spark, root, "frontier_seen", corpusKey, loadVersion)
       .map(_.select(col("url_digest")))
@@ -980,8 +981,8 @@ object CrawlStream {
     require(loadVersion < publishVersion,
       s"cycle-loop state must publish a version sorting after the loaded " +
         s"one (got load=$loadVersion publish=$publishVersion)")
-    val policy = UrlNormalize
-      .robotsPolicy(robots, "domain", "robots_txt", agent).localCheckpoint()
+    val policy = barrier(UrlNormalize
+      .robotsPolicy(robots, "domain", "robots_txt", agent))
     def loadSeen(kind: String): DataFrame = ArtifactStore
       .loadUpTo(spark, root, kind, corpusKey, loadVersion)
       .map(_.select(col("url_digest")))

@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 import graft.operators.{CorpusPipeline, Dedup, Sampling, TextAnalysis, UrlNormalize}
+import graft.operators.GraftCheckpoint.barrier
 
 /** End-to-end composed CRAWL pipeline sweep (verdict r10 ask #4): the
   * full front-end the standalone q137/q146/q152/q138/q136/q141 rungs
@@ -58,7 +59,7 @@ object CrawlScale {
         .select(col("file_id"), col("target_uri").as("url"), col("payload"))
       // skinny (id, url) barrier: the WARC walk runs once for the
       // payload path, not once per gate (the q149 discipline)
-      val urls = recs.select("file_id", "url").localCheckpoint()
+      val urls = barrier(recs.select("file_id", "url"))
       val robots = d.select(pmod(col("doc_id"), lit(7)).as("h")).distinct()
         .select(
           concat(lit("site"), col("h").cast("string"), lit(".example"))
@@ -68,9 +69,8 @@ object CrawlScale {
             when(col("h") % 2 === 0, concat(lit("Crawl-delay: "),
               (col("h") + 1).cast("string"), lit("\n")))
               .otherwise(lit(""))).as("robots_txt"))
-      val policy = UrlNormalize
-        .robotsPolicy(robots, "domain", "robots_txt", "graftbot")
-        .localCheckpoint()
+      val policy = barrier(UrlNormalize
+        .robotsPolicy(robots, "domain", "robots_txt", "graftbot"))
       val robotsOk = UrlNormalize
         .robotsGateFromPolicy(urls, "file_id", "url", policy)
         .filter(col("allowed")).select("file_id")
@@ -94,7 +94,7 @@ object CrawlScale {
       // found by the round-12 politeness A/B, where the polite
       // variant's shuffle accidentally created a ReuseExchange point
       // and beat the "cheaper" unordered chain by 1.5x at 100x
-      val fetched = (if (polite) {
+      val fetched = barrier(if (polite) {
         val sched = UrlNormalize.politenessSchedule(
           gatedRecs.select("file_id", "url"), "file_id", "url",
           policy.select(col("domain"), col("crawl_delay")),
@@ -115,7 +115,6 @@ object CrawlScale {
       } else gatedRecs
         .select(col("file_id").as("doc_id"),
           decode(col("payload"), "ISO-8859-1").as("text")))
-        .localCheckpoint()
       // extract + C4 lines + substring dedup + gates + exact dedup +
       // verified LSH near-dup, composed inside clean()
       val survivors = CorpusPipeline.clean(fetched, "doc_id", "text",
@@ -131,10 +130,9 @@ object CrawlScale {
       // each consumer re-evaluates clean()'s whole dedup chain from
       // the fetched checkpoint (round-12 decomposition: the downstream
       // stages dominated the 100x wall and swung 2x run-to-run)
-      val kept = fetched.join(survivors.select("doc_id"), Seq("doc_id"))
+      val kept = barrier(fetched.join(survivors.select("doc_id"), Seq("doc_id"))
         .select(col("doc_id"),
-          graft.operators.Html.extractText(col("text")).as("text"))
-        .localCheckpoint()
+          graft.operators.Html.extractText(col("text")).as("text")))
       // benchmark decontamination: n-gram containment vs the held-out
       // slice; keep docs under 50% overlap
       val contam = Dedup.contamination(

@@ -339,6 +339,55 @@ class DedupSpec extends SparkTestBase {
     assert(wrote > 0, "expected reliable checkpoint files under the dir")
   }
 
+  test("registered queries over every routed barrier site: reliable fingerprints match local") {
+    // one query (or more) per file whose barriers go through
+    // GraftCheckpoint.barrier; each runs once with local barriers and
+    // once under its own checkpoint dir, which must receive files
+    val names = Seq("q33_minhash_lsh_pairs", "q35_simhash_pairs",
+      "q57_ann_lsh", "q67_dedup_clusters", "q111_fuzzy_join",
+      "q119_quality_classifier", "q122_bpe_train", "q129_epoch_shuffle",
+      "q134_pq_search", "q159_unigram_train", "q163_wordpiece_train",
+      "q61_corpus_clean", "q114_semantic_dedup", "q171_stream_frontier",
+      "q173_crawl_gate_gz", "q198_http_gate")
+    // (rows, sum of a per-row xxhash64 over every column); doubles are
+    // rounded so the last bits of a float sum cannot flip it
+    def fingerprint(q: String): (Long, java.math.BigDecimal) = {
+      val df = SparkEntry.queries(q)(spark, sfDir)
+      val cols = df.schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
+        val c = df.col(s"`${f.name}`")
+        f.dataType match {
+          case org.apache.spark.sql.types.DoubleType |
+               org.apache.spark.sql.types.FloatType => round(c, 6).as(s"c$i")
+          case _ => c.as(s"c$i")
+        }
+      }
+      val r = df.select(xxhash64(cols: _*).cast("decimal(38,0)").as("h"))
+        .agg(count(lit(1)), coalesce(sum(col("h")), lit(0).cast("decimal(38,0)")))
+        .head()
+      (r.getLong(0), r.getDecimal(1))
+    }
+    def releaseMemos(): Unit = {
+      Similarity.releaseCells(); Similarity.releasePq(); Dedup.releaseComponents()
+    }
+    val root = java.nio.file.Files.createTempDirectory("graft-routed-ckpt")
+    releaseMemos()
+    val local = names.map(q => q -> fingerprint(q)).toMap
+    releaseMemos() // a memo hit would return the local artifact
+    val reliable = names.map { q =>
+      q -> withCheckpointDir(root.resolve(q).toString)(fingerprint(q))
+    }.toMap
+    releaseMemos() // later specs get local artifacts again
+    assert(spark.sparkContext.getCheckpointDir.isEmpty)
+    names.foreach { q =>
+      assert(reliable(q) == local(q), s"$q: reliable ${reliable(q)} vs local ${local(q)}")
+      val dir = root.resolve(q)
+      val wrote = if (!java.nio.file.Files.isDirectory(dir)) 0L
+        else java.nio.file.Files.walk(dir)
+          .filter(p => java.nio.file.Files.isRegularFile(p)).count()
+      assert(wrote > 0, s"$q: expected reliable checkpoint files under $dir")
+    }
+  }
+
   test("cosine of identical vectors is 1, orthogonal is 0") {
     import spark.implicits._
     val df = Seq((Array(1.0, 0.0), Array(1.0, 0.0), Array(0.0, 2.0)))

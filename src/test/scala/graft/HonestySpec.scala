@@ -129,11 +129,14 @@ class HonestySpec extends SparkTestBase {
   test("config: env/property reads under src/main are exactly the allowlist") {
     // Deployment settings belong in Spark's own conf; a new
     // environment or system-property switch must be added here,
-    // visibly, rather than slip into library code.
+    // visibly, rather than slip into library code. A name read through
+    // a constant is resolved against that file's `val NAME = "…"`; one
+    // that does not resolve is reported as unlisted.
     val allow = Set("SPARK_GRAFT_CPUS", "SPARK_GRAFT_SF_DIR",
-      "SPARK_GRAFT_BENCH_OUT", "GRAFT_HASH_BACKEND", "java.io.tmpdir")
+      "SPARK_GRAFT_BENCH_OUT", "graft.hash.backend", "java.io.tmpdir")
     val read = ("""(?:sys\.env|sys\.props|System\.getenv|System\.getProperty)""" +
-      """(?:\s*\.\s*(?:get|getOrElse|apply|contains))?\s*\(\s*"([^"]+)"""").r
+      """(?:\s*\.\s*(?:get|getOrElse|apply|contains))?\s*\(\s*""" +
+      """(?:"([^"]+)"|([A-Za-z_][\w.]*))""").r
     val root = java.nio.file.Paths.get("src/main/scala")
     assert(java.nio.file.Files.isDirectory(root), s"no sources at $root")
     val walk = java.nio.file.Files.walk(root)
@@ -141,10 +144,38 @@ class HonestySpec extends SparkTestBase {
         .filter(_.toString.endsWith(".scala"))
         .flatMap { f =>
           val src = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
-          read.findAllMatchIn(src).map(_.group(1))
+          def constant(ref: String): String = {
+            val id = ref.split('.').last
+            ("""\bval\s+""" + id + """\s*(?::\s*String\s*)?=\s*"([^"]+)"""").r
+              .findFirstMatchIn(src).map(_.group(1))
+              .getOrElse(s"<unresolved $ref in ${f.getFileName}>")
+          }
+          read.findAllMatchIn(src).map(m =>
+            Option(m.group(1)).getOrElse(constant(m.group(2))))
         }.toSet
       finally walk.close()
     assert(names == allow,
       s"unlisted: ${names -- allow}; listed but unread: ${allow -- names}")
+  }
+
+  test("checkpoint policy: only GraftCheckpoint calls checkpoint/localCheckpoint") {
+    // every lineage barrier goes through GraftCheckpoint.barrier (or
+    // partitionedBarrier), so `spark.checkpoint.dir` decides the mode
+    // of all of them; a direct call elsewhere would pick its own
+    val call = """\.(?:localCheckpoint|checkpoint)\s*\(""".r
+    val owner = java.nio.file.Paths.get("src/main/scala/graft/operators/GraftCheckpoint.scala")
+    assert(call.findFirstIn(new String(java.nio.file.Files.readAllBytes(owner),
+      "UTF-8")).isDefined, s"the pattern must match $owner's own calls")
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    val offenders = try walk.iterator().asScala
+        .filter(f => f.toString.endsWith(".scala") && f != owner)
+        .flatMap { f =>
+          val lines = java.nio.file.Files.readAllLines(f).asScala
+          lines.zipWithIndex.collect {
+            case (l, i) if call.findFirstIn(l).isDefined => s"$f:${i + 1}: ${l.trim}"
+          }
+        }.toList
+      finally walk.close()
+    assert(offenders.isEmpty, s"direct checkpoint calls:\n${offenders.mkString("\n")}")
   }
 }
