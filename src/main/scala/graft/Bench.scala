@@ -154,9 +154,5 @@ object Bench {
     // always fits the tail, and carries every headline field; the
     // complete per-query record lives in bench_full.json above.
     println(s"""{"metric":"total","value":$total,"unit":"sec","calib_s":$calib,"value_norm":$totalNorm,"n_failed":${failed.size},"failed":$failedJson,"n_queries":${results.size},"sf":"$sfDir","queries_in":"$outFile"}""")
-    // forked JVM: exit deterministically once the JSON line is out —
-    // leftover non-daemon threads from streaming drains otherwise keep
-    // the process alive long after the harness has its result
-    sys.exit(0)
   }
 }

@@ -78,9 +78,5 @@ object Verify {
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
       oracleJson(SparkEntry.oracleSql, only))
     try spark.stop() catch { case _: Throwable => () }
-    // forked JVM (run/fork := true): exit deterministically — leftover
-    // non-daemon threads from streaming drains otherwise keep the
-    // process alive for minutes after all outputs are written
-    sys.exit(0)
   }
 }

@@ -16,6 +16,8 @@ import org.apache.spark.sql.SparkSession
   *     across engines (oracle comparisons, cluster nodes)
   *   - nanosAsLong so TIMESTAMP(NANOS) parquet (events.ts) is readable;
   *     Tables.load rebuilds a proper timestamp column.
+  *   - state stores at `EventStream.StatePartitions`, apart from the
+  *     shuffle width: streaming state tracks state size, not cores.
   *
   * Scale override: `--conf spark.sql.shuffle.partitions=n` (or
   * `-Dspark.sql.shuffle.partitions=n`) replaces the per-core width.
@@ -45,6 +47,10 @@ object GraftSession {
       .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // Spark copies the shuffle width into this key at query start
+      // only when it is unset; set, it sizes every state store alone
+      .config("spark.sql.streaming.internal.stateStore.partitions",
+        graft.streaming.EventStream.StatePartitions.toString)
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "127.0.0.1")
     val spark = (if (hive) builder.enableHiveSupport() else builder).getOrCreate()

@@ -1192,9 +1192,11 @@ object ExtensionQueries {
     // doc_id-keyed, because which ARRIVAL survives is an ingest-order
     // detail — content survivorship is the deterministic contract.
     "q96_stream_dedup_docs" -> ((s, dir) => {
-      val seenDigests = Tables.load(s, dir, "documents")
+      // materialized once, as q166's delays: a micro-batch runs without
+      // AQE, so a lazy distinct would run at the session shuffle width
+      val seenDigests = barrier(Tables.load(s, dir, "documents")
         .filter(pmod(col("doc_id"), lit(3)) =!= 0)
-        .select(md5(col("text")).as("content_hash")).distinct()
+        .select(md5(col("text")).as("content_hash")).distinct())
       graft.streaming.IncrementalAlerts.dedupStream(
           s, s"$dir/documents.parque*", seenDigests, "graft_q96_sink",
           basePath = Some(dir))

@@ -694,8 +694,11 @@ object PipelineQueries {
             when(pmod(col("dnum"), lit(4)) === 0,
               lit("\nUser-agent: graftbot\nCrawl-delay: 0.5\n"))
               .otherwise(lit(""))).as("robots_txt"))
-      val delays = UrlNormalize.crawlDelay(robots, "domain",
-        "robots_txt", "graftbot")
+      // materialized once: a micro-batch runs without AQE, so a lazy
+      // static side would rerun its distinct at the session shuffle
+      // width in every batch
+      val delays = barrier(UrlNormalize.crawlDelay(robots, "domain",
+        "robots_txt", "graftbot"))
       graft.streaming.CrawlStream.drainSchedule(s, arrivalDir, delays)
     }),
 

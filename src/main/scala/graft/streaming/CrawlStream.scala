@@ -625,7 +625,7 @@ object CrawlStream {
     val out = crawlLoopPlan(spark, reader.parquet(warcDir), robots,
       blocklist, priorities, root, corpusKey, loadVersion, publishVersion,
       agent, defaultDelaySecs)
-    EventStream.drain(spark)(out.writeStream.format("parquet")
+    EventStream.drain(out.writeStream.format("parquet")
       .option("path", sinkDir)
       .option("checkpointLocation", checkpointDir)
       .outputMode("append"))
@@ -1037,7 +1037,7 @@ object CrawlStream {
     val out = cycleLoopPlan(spark, warcDir, robots, blocklist, delays,
       root, corpusKey, loadVersion, publishVersion, agent,
       maxFilesPerTrigger, defaultDelaySecs)
-    EventStream.drain(spark)(out.writeStream.format("parquet")
+    EventStream.drain(out.writeStream.format("parquet")
       .option("path", sinkDir)
       .option("checkpointLocation", checkpointDir)
       .outputMode("append"))

@@ -28,27 +28,18 @@ object EventStream {
     * stores and return the finished query. Generic in the row type, so
     * typed Datasets drain as they are.
     *
-    * It starts with `spark.sql.shuffle.partitions` = [[StatePartitions]]
-    * (the stream clones the session conf at `start`, so the conf is
-    * set around `start` only). Stateful operators pin their store count
-    * from it at query start (captured into the checkpoint's offset
-    * metadata — AQE never coalesces state stores or streaming
-    * shuffles), so it tracks STATE SIZE, not core count; resuming
-    * checkpoints keep their recorded width. At the session default
-    * (one per core) every micro-batch committed one store file per core
-    * per stateful operator. A foreachBatch drain's batch function runs
-    * its shuffles at the same width. */
-  def drain[T](spark: SparkSession)(writer: DataStreamWriter[T]): StreamingQuery = {
-    writer.trigger(Trigger.AvailableNow())
-    // `start` only clones the conf and launches the query thread, so
-    // no Spark job runs under the lock; it keeps concurrent starts
-    // from interleaving their set/restore pairs
-    val q = startLock.synchronized {
-      val key = "spark.sql.shuffle.partitions"
-      val old = spark.conf.get(key)
-      spark.conf.set(key, StatePartitions.toString)
-      try writer.start() finally spark.conf.set(key, old)
-    }
+    * The state-store width is the session's: `GraftSession.build` sets
+    * Spark's `spark.sql.streaming.internal.stateStore.partitions` to
+    * [[StatePartitions]], so stateful operators pin that many stores at
+    * query start whatever the session's shuffle width is (AQE never
+    * coalesces state stores or streaming shuffles). Spark records the
+    * width in the checkpoint's offset metadata, so resumed checkpoints
+    * keep theirs. Shuffles that hold no state, and a foreachBatch
+    * drain's batch function, run at the session's shuffle width with
+    * AQE off, once per micro-batch, so a static side that shuffles is
+    * materialized before the drain (`GraftCheckpoint.barrier`). */
+  def drain[T](writer: DataStreamWriter[T]): StreamingQuery = {
+    val q = writer.trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
     unloadStateStores(q.runId)
     q
@@ -70,13 +61,12 @@ object EventStream {
       .foreach(StateStore.doMaintenanceAndUnload)
   }
 
-  private object startLock
-
-  /** State-store partition count for the drains. 8 tracks the tiny
-    * test-SF state; unlike shuffle partitions it CANNOT be
-    * AQE-coalesced after the fact (state stores pin their
-    * partitioning at first checkpoint), so at 100 TB it is sized to
-    * state volume up front (see SCALE.md "Streaming state"). */
+  /** State-store partition count for the drains, read once by
+    * `GraftSession.build`. 8 tracks the tiny test-SF state; unlike
+    * shuffle partitions it CANNOT be AQE-coalesced after the fact
+    * (state stores pin their partitioning at first checkpoint), so at
+    * 100 TB it is sized to state volume up front (see SCALE.md
+    * "Streaming state"). */
   val StatePartitions = 8
 
   private val drainSeq = new java.util.concurrent.atomic.AtomicLong(0L)
@@ -103,7 +93,7 @@ object EventStream {
                        mode: OutputMode = OutputMode.Append()): DataFrame = {
     val spark = ds.sparkSession
     val name = s"${prefix}_${drainSeq.incrementAndGet()}"
-    drain(spark)(ds.writeStream.format("memory").queryName(name)
+    drain(ds.writeStream.format("memory").queryName(name)
       .outputMode(mode))
     val drained = spark.table(name)
     val old = lastDrain.put(prefix, name)

@@ -191,7 +191,7 @@ object IncrementalAlerts {
       .groupBy(col("vist_docu_dk"))
       .agg(max(col("vist_dt_abertura_vista")).as("dt_max_vista"))
 
-    EventStream.drain(spark)(vistaMax.writeStream
+    EventStream.drain(vistaMax.writeStream
       .outputMode(OutputMode.Update())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -324,7 +324,7 @@ object IncrementalAlerts {
         max(when(col("stao_tppr_dk").isin(nf.conversao: _*), 1)
           .otherwise(0)).as("flag_conversao_max"))
 
-    EventStream.drain(spark)(aggStream.writeStream
+    EventStream.drain(aggStream.writeStream
       .outputMode(OutputMode.Update())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>

@@ -59,7 +59,7 @@ object UpsertSink {
     * the current backlog, then stop) and return the finished query. */
   def run(stream: DataFrame, table: String, key: String, ord: String,
           checkpoint: String, tieBreak: Seq[String] = Nil): StreamingQuery =
-    EventStream.drain(stream.sparkSession)(stream.writeStream
+    EventStream.drain(stream.writeStream
       .foreachBatch((b: DataFrame, _: Long) =>
         upsertBatch(b, table, key, ord, tieBreak))
       .option("checkpointLocation", checkpoint))

@@ -181,6 +181,5 @@ object CrawlScale {
     println(results.map { case (d, j) => s""""$d":$j""" }
       .mkString("{", ",", "}"))
     spark.stop()
-    sys.exit(0)
   }
 }

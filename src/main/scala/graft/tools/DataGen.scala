@@ -54,7 +54,6 @@ object DataGen {
     if (tables.contains("lineitem")) scaleLineitem(spark, src, out, copies)
     if (tables.contains("embeddings")) scaleEmbeddings(spark, src, out, copies)
     spark.stop()
-    sys.exit(0)
   }
 
   /** `part` scale-up for the fuzzy-join sweep (q111): copy c shifts

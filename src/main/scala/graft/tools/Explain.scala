@@ -10,7 +10,8 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val mode = if (args.length > 1) args(1) else "summary"
-    val spark = graft.core.GraftSession.build("graft-explain", 4)
+    val spark = graft.core.GraftSession.build("graft-explain",
+      graft.core.GraftSession.envCores)
     if (mode == "summary") {
       SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
         try {

@@ -62,6 +62,5 @@ object Scale {
     }
     println(cells.mkString("{", ",", "}"))
     spark.stop()
-    sys.exit(0)
   }
 }

@@ -61,6 +61,5 @@ object TuneCaps {
     }
     println(cells.mkString("{", ",", "}"))
     spark.stop()
-    sys.exit(0)
   }
 }

@@ -158,6 +158,22 @@ class HonestySpec extends SparkTestBase {
       s"unlisted: ${names -- allow}; listed but unread: ${allow -- names}")
   }
 
+  /** `file:line: text` of every line under src/main/scala that
+    * `pattern` matches, outside the file `except`. */
+  private def mainLinesMatching(pattern: scala.util.matching.Regex,
+      except: Option[java.nio.file.Path] = None): List[String] = {
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    try walk.iterator().asScala
+        .filter(f => f.toString.endsWith(".scala") && !except.contains(f))
+        .flatMap { f =>
+          val lines = java.nio.file.Files.readAllLines(f).asScala
+          lines.zipWithIndex.collect {
+            case (l, i) if pattern.findFirstIn(l).isDefined => s"$f:${i + 1}: ${l.trim}"
+          }
+        }.toList
+      finally walk.close()
+  }
+
   test("checkpoint policy: only GraftCheckpoint calls checkpoint/localCheckpoint") {
     // every lineage barrier goes through GraftCheckpoint.barrier (or
     // partitionedBarrier), so `spark.checkpoint.dir` decides the mode
@@ -166,16 +182,16 @@ class HonestySpec extends SparkTestBase {
     val owner = java.nio.file.Paths.get("src/main/scala/graft/operators/GraftCheckpoint.scala")
     assert(call.findFirstIn(new String(java.nio.file.Files.readAllBytes(owner),
       "UTF-8")).isDefined, s"the pattern must match $owner's own calls")
-    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
-    val offenders = try walk.iterator().asScala
-        .filter(f => f.toString.endsWith(".scala") && f != owner)
-        .flatMap { f =>
-          val lines = java.nio.file.Files.readAllLines(f).asScala
-          lines.zipWithIndex.collect {
-            case (l, i) if call.findFirstIn(l).isDefined => s"$f:${i + 1}: ${l.trim}"
-          }
-        }.toList
-      finally walk.close()
+    val offenders = mainLinesMatching(call, except = Some(owner))
     assert(offenders.isEmpty, s"direct checkpoint calls:\n${offenders.mkString("\n")}")
+  }
+
+  test("session conf: nothing under src/main sets a conf at run time") {
+    // a session conf changed around one operator is seen by every query
+    // planned on the session meanwhile; GraftSession.build sets them once
+    val set = """\bconf\.set\s*\(""".r
+    assert(set.findFirstIn("""spark.conf.set("k", "v")""").isDefined)
+    val offenders = mainLinesMatching(set)
+    assert(offenders.isEmpty, s"run-time conf sets:\n${offenders.mkString("\n")}")
   }
 }

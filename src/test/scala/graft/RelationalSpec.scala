@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.Relational
+import scala.jdk.CollectionConverters._
 
 class RelationalSpec extends SparkTestBase {
 
@@ -201,10 +202,24 @@ class RelationalSpec extends SparkTestBase {
   }
 
   test("every registered query runs on sf0.001 and keeps its column names") {
+    // and leaves no stream running and no non-daemon thread behind:
+    // either would keep a main's JVM alive after its last line. The
+    // baseline is taken after the first query, once Spark's own
+    // threads are up; a thread gets 5 s to finish ending
+    def nonDaemon(): Set[Thread] = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.isAlive && !t.isDaemon).toSet
+    var baseline = Option.empty[Set[Thread]]
     SparkEntry.queries.foreach { case (name, fn) =>
       val df = fn(spark, sfDir)
       assert(df.columns.nonEmpty, s"$name produced no columns")
       df.count() // force execution end-to-end
+      assert(spark.streams.active.isEmpty,
+        s"$name left streams running: ${spark.streams.active.map(_.name).mkString(", ")}")
+      val base = baseline.getOrElse(nonDaemon())
+      baseline = Some(base)
+      (nonDaemon() -- base).foreach(_.join(5000))
+      val left = nonDaemon() -- base
+      assert(left.isEmpty, s"$name left non-daemon threads: ${left.map(_.getName).mkString(", ")}")
     }
   }
 
